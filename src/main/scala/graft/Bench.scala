@@ -6,10 +6,55 @@ import org.apache.spark.sql.SparkSession
   * sys.env("SPARK_GRAFT_SF_DIR") and prints ONE JSON line with per-query
   * wall-clock seconds. Materialization via the noop sink — full compute,
   * no collect, no count-only shortcuts (count() would let Catalyst skip
-  * column decode on scan-only queries).
+  * column decode on scan-only queries). An entry that throws is never a
+  * timing: it is left out of the total, named in the `failed` list of the
+  * stdout line and of bench_full.json, and the run exits 1.
   */
 object Bench {
+  /** The stdout subset of per-query timings. The driver captures only a
+    * bounded tail of stdout: printing all ~100 per-query timings makes the
+    * JSON line longer than the capture window and the head of the line is
+    * lost (rounds 1 and 2 both came back unparseable). Retry keys stay out
+    * of it too: in r14 dozens of entries tripped the 1.5x floor and their
+    * `_rN_` keys pushed the head of the line out of the captured tail. The
+    * complete per-query map, retry triples included, goes to
+    * bench_full.json instead. */
+  private val headline = Set(
+    "q01_pricing_summary", "q04_shipping_priority", "q05_local_supplier_volume",
+    "q16_count_distinct", "q27_asof_join", "q28_window_suite",
+    "sql_tpch_q09", "sql_tpch_q12", "sql_tpch_q18", "sql_tpch_q21",
+    "nx_q5_hot_items", "nx_q8_monitor_new_users",
+    "w02_hopping_agg", "w03_session_agg",
+    "p01_dedup_exact", "p08_minhash_lsh_pairs", "p16_ngram_jaccard",
+    "p17_dedup_clusters", "p20_pipeline_e2e")
+
+  private def fields(rs: Seq[(String, Double)]): Seq[String] =
+    rs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+
+  private def names(ns: Seq[String]): String =
+    ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** The one stdout line. `timed` holds the entries that ran; the total and
+    * the entry count cover those only, and `failed` is listed by name. */
+  private[graft] def line(timed: Seq[(String, Double)], failed: Seq[String],
+      sfDir: String): String = {
+    val total = timed.map(_._2).sum
+    val qs = fields(timed.filter { case (k, _) => headline(k) }).mkString("{", ",", "}")
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_entries":${timed.size},""" +
+      s""""failed":${names(failed)},"queries":$qs,"sf":"$sfDir"}"""
+  }
+
+  /** bench_full.json: every timing, retry and calibration figure, plus the
+    * failed entries by name (a list, so the prior-floor reader below never
+    * takes one for a timing). */
+  private[graft] def full(results: Seq[(String, Double)], failed: Seq[String]): String =
+    (fields(results) :+ s""""failed":${names(failed)}""").mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
+    // Optional args restrict the run to named queries (dev loop); the
+    // driver always calls with no args.
+    Catalog.requireKnown(args.toSeq)
+    val only = args.toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -32,9 +77,6 @@ object Bench {
     // reflects steady-state execution, not first-query classloading.
     SparkEntry.queries.get("q01_pricing_summary")
       .foreach(fn => fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save())
-    // Optional args restrict the run to named queries (dev loop); the
-    // driver always calls with no args.
-    val only = args.toSet
     // Session setup, not query cost: materialize the derived
     // lineitem/partsupp views for the bench dir up front — otherwise the
     // one-time write lands on whichever sql_* entry runs first and reads
@@ -94,11 +136,13 @@ object Bench {
     val retries = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     val timed = catalog.zipWithIndex.map { case ((name, fn), i) =>
       if (i == mid && catalog.size > 2) calibMid = calibrate()
-      def once(): (Double, Long) = {
+      def once(): (Double, Long, Boolean) = {
         val g0 = gcMs()
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
+        val ok =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false }
         val sec = (System.nanoTime() - t0) / 1e9
         // Iterative entries (p17/p42) localCheckpoint between rounds; the
         // blocks outlive the entry (freed only on driver GC via the
@@ -107,14 +151,15 @@ object Bench {
         // of the catalog total). Their results are already materialized
         // here, so drop the blocks eagerly — each entry starts clean.
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        (sec, gcMs() - g0)
+        (sec, gcMs() - g0, ok)
       }
-      val (sec, gc) = once()
+      val (sec, gc, ok) = once()
       // Per-query line as we go: if the run stalls (r03: environmental
       // 100s pauses), the driver's captured log tail shows exactly where —
       // and the gc column says whether the JVM (gc-bound) or the host
       // (time passes, no gc) ate the wall clock.
-      System.err.println(f"[bench] $name%-28s $sec%8.3f s  gc=$gc%4d ms")
+      System.err.println(f"[bench] $name%-28s $sec%8.3f s  gc=$gc%4d ms" +
+        (if (ok) "" else "  FAILED"))
       // Tripwire (r7 verdict #4 hardening): any entry whose FIRST run
       // exceeds 1.5× its committed floor, above absolute noise (0.8 s),
       // and not GC-bound (GC under a third of the wall — a gc-bound
@@ -124,23 +169,27 @@ object Bench {
       // runs ride along as _r{1,2,3}_<name> so the spike stays auditable.
       val floor = prior.getOrElse(name, Double.PositiveInfinity)
       val reported =
-        if (sec > 1.5 * floor && sec > 0.8 && gc * 3 < sec * 1000) {
-          val (sec2, gc2) = once()
-          val (sec3, gc3) = once()
+        if (!ok) None
+        else if (sec > 1.5 * floor && sec > 0.8 && gc * 3 < sec * 1000) {
+          val (sec2, gc2, ok2) = once()
+          val (sec3, gc3, ok3) = once()
           val med = Seq(sec, sec2, sec3).sorted.apply(1)
-          retries += (s"_r1_$name" -> sec)
-          retries += (s"_r2_$name" -> sec2)
-          retries += (s"_r3_$name" -> sec3)
           System.err.println(
             f"[bench] $name%-28s $sec2%8.3f s  gc=$gc2%4d ms  RETRY-2" +
             f" (first $sec%.3f > 1.5x floor $floor%.3f)")
           System.err.println(
             f"[bench] $name%-28s $sec3%8.3f s  gc=$gc3%4d ms  RETRY-3" +
             f" -> median $med%.3f")
-          med
-        } else sec
+          if (ok2 && ok3) {
+            retries ++= Seq(s"_r1_$name" -> sec, s"_r2_$name" -> sec2,
+              s"_r3_$name" -> sec3)
+            Some(med)
+          } else None
+        } else Some(sec)
       name -> reported
     }
+    val failed = timed.collect { case (name, None) => name }
+    val ran = timed.collect { case (name, Some(sec)) => name -> sec }
     val calibEnd = calibrate()
     System.err.println(f"[bench] calibration start/mid/end: " +
       f"$calibStart%.3f / $calibMid%.3f / $calibEnd%.3f s " +
@@ -160,44 +209,21 @@ object Bench {
       if (calibRatios.nonEmpty) calibRatios.sum / calibRatios.size else 1.0
     System.err.println(f"[bench] host inflation factor vs committed floors: " +
       f"$hostFactor%.2f")
-    val results = timed ++ retries ++ calibs ++
+    // Calibration probes are diagnostics, not catalog entries: `line`
+    // keeps them out of the headline total and entry count.
+    val results = ran ++ retries ++ calibs ++
       Seq("_host_factor" -> hostFactor)
-    def toJson(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-    // Calibration probes are diagnostics, not catalog entries: keep them
-    // out of the headline total and entry count.
-    val total = timed.map(_._2).sum
-    // The driver captures only a bounded tail of stdout: printing all
-    // ~100 per-query timings makes the JSON line longer than the capture
-    // window and the head of the line is lost (rounds 1 and 2 both came
-    // back unparseable). Keep stdout to a compact headline subset and
-    // write the complete per-query map to bench_full.json for BENCH_NOTES.
-    val headline = Set(
-      "q01_pricing_summary", "q04_shipping_priority", "q05_local_supplier_volume",
-      "q16_count_distinct", "q27_asof_join", "q28_window_suite",
-      "sql_tpch_q09", "sql_tpch_q12", "sql_tpch_q18", "sql_tpch_q21",
-      "nx_q5_hot_items", "nx_q8_monitor_new_users",
-      "w02_hopping_agg", "w03_session_agg",
-      "p01_dedup_exact", "p08_minhash_lsh_pairs", "p16_ngram_jaccard",
-      "p17_dedup_clusters", "p20_pipeline_e2e")
-    // r14 post-mortem: retries are NOT rare on a throttled host — dozens of
-    // entries tripped the 1.5x floor in the driver's r14 window, the _rN_
-    // ride-along keys bloated this line past the driver's bounded stdout
-    // capture, and the head ({"metric":"total"...) fell outside the tail —
-    // the exact r01/r02 failure the headline subset fixed for the main map.
-    // Keep the stdout line bounded unconditionally: headline subset only.
-    // The full retry triples remain auditable in bench_full.json (written
-    // above via `results`).
-    val qs = toJson(timed.filter { case (k, _) => headline(k) })
-    val n = timed.size
     // Absolute path (r03 advice: a CWD-relative path lands wherever the
     // driver launched the JVM); overridable for dev loops.
     val fullPath = java.nio.file.Paths.get(sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_FULL", "/root/repo/bench_full.json")).toAbsolutePath
-    java.nio.file.Files.write(fullPath, toJson(results).getBytes("UTF-8"))
+    java.nio.file.Files.write(fullPath, full(results, failed).getBytes("UTF-8"))
     System.err.println(s"[bench] full per-query map: $fullPath")
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_entries":$n,"queries":$qs,"sf":"$sfDir"}""")
+    println(line(ran, failed, sfDir))
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} entries FAILED: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

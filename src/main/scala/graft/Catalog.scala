@@ -66,6 +66,13 @@ object Catalog {
     qs.map(q => q.name -> q).toMap
   }
 
+  /** The entry names a Bench or Verify command line restricts the run to.
+    * An unknown name aborts the run instead of silently shrinking it. */
+  def requireKnown(names: Seq[String]): Unit = {
+    val unknown = names.filterNot(byName.contains)
+    require(unknown.isEmpty, s"unknown catalog entries: ${unknown.mkString(", ")}")
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     byName.map { case (n, q) =>
       n -> ((s: SparkSession, d: String) => finalizeDoubles(q.run(s, d)))

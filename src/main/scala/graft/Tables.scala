@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loads the driver-provided TESTDATA parquet tables (TESTDATA.md) and
   * registers them as temp views so catalog queries can be written either
@@ -21,11 +23,15 @@ object Tables {
     * `events.ts` is TIMESTAMP(NANOS) parquet, which Spark 4 rejects by
     * default; we read it as a nanos long and truncate to a µs timestamp —
     * exactly what DuckDB's `epoch_us(ts)` yields, keeping oracles aligned.
+    * The conf that allows this is set before EVERY table's read, not only
+    * events': it is part of `readParquet`'s cache key, so setting it
+    * mid-way through `registerAll` would have the tables read before
+    * events inferred again on the next call.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val raw = readParquet(spark, s"$dir/$name.parquet")
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
       // Driver TESTDATA ships ts as TIMESTAMP(NANOS) → read as a nanos
       // long (conf above) and truncate to µs; regenerated data (GenScale
       // sf1) already carries a µs timestamp — pass it through.
@@ -43,9 +49,50 @@ object Tables {
             .cast(org.apache.spark.sql.types.TimestampType))
         case _ => raw
       }
-    } else {
-      spark.read.parquet(s"$dir/$name.parquet")
-    }
+    } else raw
+  }
+
+  /** Session confs that change what parquet schema inference returns for
+    * the same files. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** What an inferred schema depends on: the qualified path, the length
+    * and mtime of every file under it, and the inference confs' values. */
+  private final case class SchemaKey(path: String,
+      files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+
+  private val schemaCache =
+    scala.collection.concurrent.TrieMap.empty[SchemaKey, StructType]
+
+  /** Read the parquet file or dir at `path` with a schema inferred once per
+    * process. Without a schema, every `spark.read.parquet` runs a Spark job
+    * (`mergeSchemasInParallel`) to read the footers before the query even
+    * plans; `registerAll` paid 12 of them per call. The key (`SchemaKey`)
+    * is taken through the Hadoop `FileSystem` API on every call, so a file
+    * rewritten at the same path (GenScale output, a new TESTDATA drop) is
+    * inferred again. A missing path is never cached: inference raises
+    * Spark's own error for it.
+    */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(p)
+    val files =
+      if (!fs.exists(qualified)) Nil
+      else {
+        val it = fs.listFiles(qualified, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+          .toSeq.sorted
+      }
+    val key = SchemaKey(qualified.toString, files,
+      inferenceConfs.map(spark.conf.getOption))
+    val schema = schemaCache.getOrElseUpdate(key, spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
   }
 
   /** TESTDATA ships no `partsupp`, so the TPC-H queries that need one
@@ -165,13 +212,16 @@ object Tables {
 
   /** Register every table in `dir` as a temp view named after the table,
     * plus the derived `partsupp` view and the extended `lineitem` view
-    * (materialized once per dir — see `materializedDir`). Idempotent; cheap
-    * after the first call per dir (schema read only — scans stay lazy).
+    * (materialized once per dir — see `materializedDir`). Idempotent. After
+    * the first call per dir it submits no Spark job: every read goes
+    * through `readParquet`, whose schema cache is keyed by qualified path,
+    * each listed file's length and mtime, and the parquet inference confs,
+    * so a call costs one file listing per table and scans stay lazy.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
     all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
     val base = materializedDir(spark, dir)
-    spark.read.parquet(s"$base/partsupp").createOrReplaceTempView("partsupp")
-    spark.read.parquet(s"$base/lineitem_ext").createOrReplaceTempView("lineitem")
+    readParquet(spark, s"$base/partsupp").createOrReplaceTempView("partsupp")
+    readParquet(spark, s"$base/lineitem_ext").createOrReplaceTempView("lineitem")
   }
 }

@@ -70,6 +70,7 @@ object Verify {
     // Optional trailing args restrict the dump to named queries (dev loop);
     // the driver always calls with exactly (sfDir, outDir).
     val Array(sfDir, outDir) = args.take(2)
+    Catalog.requireKnown(args.drop(2).toSeq)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()

@@ -104,9 +104,11 @@ object NexmarkBatch {
     // serializes both the 92k-row generator expressions and the batch's
     // scan+sink work, and at this volume that parallelism loss exceeds
     // the per-file overhead saved. Numbers in OPTIMIZATION_r15.md.
-    bids(s).write.mode("overwrite").parquet(inDir)
+    val landed = bids(s)
+    landed.write.mode("overwrite").parquet(inDir)
     mark("input_write")
-    val shaped = s.readStream.schema(s.read.parquet(inDir).schema)
+    // The schema just written: the stream needs no inference job.
+    val shaped = s.readStream.schema(landed.schema)
       .parquet(inDir)
       .select(col("auction"), col("bidder"), col("price"), col("b_date_time"),
         to_date(col("b_date_time")).as("b_date"),

@@ -4554,6 +4554,10 @@ object Pipeline {
     */
   private val p71HookArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
   private val p71CallSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+  /** Per-pid tmp dir holding p71's per-call `call_n` signature pins. */
+  private[graft] def p71PinBase: String =
+    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+      s"graft_p71_sigs_${ProcessHandle.current().pid()}").toAbsolutePath.toString
 
   /** p71's body, with the sigs pin exposed for the Probe p71shape A/B
     * (pinSigs = compute the shingle+minhash expression once and reuse it
@@ -4572,9 +4576,7 @@ object Pipeline {
           // and read it back, which also hands the planner REAL size stats
           // for the verify joins instead of a localCheckpoint's
           // defaultSizeInBytes.
-          val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-            s"graft_p71_sigs_${ProcessHandle.current().pid()}")
-            .toAbsolutePath.toString
+          val base = p71PinBase
           def rm(f: java.io.File): Unit = {
             if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
             f.delete(): Unit
@@ -4583,16 +4585,20 @@ object Pipeline {
           // earlier invocation keeps its resolved file listing valid while
           // a later invocation materializes its own pin (DeterminismSpec
           // holds two invocations side by side — an in-place overwrite
-          // left frame 1 pointing at deleted part files). The pid base is
-          // wiped once per JVM (stale pid-reuse) and at exit (same
+          // left frame 1 pointing at deleted part files). Only the last
+          // two calls' dirs stay alive: minting call_n deletes call_{n-2},
+          // so the tmp footprint is at most two signature tables. The pid
+          // base is wiped once per JVM (stale pid-reuse) and at exit (same
           // discipline as the stw gates).
           val n = p71CallSeq.getAndIncrement()
           if (n == 0L) rm(new java.io.File(base))
+          else if (n >= 2L) rm(new java.io.File(s"$base/call_${n - 2}"))
           if (p71HookArmed.compareAndSet(false, true))
             sys.addShutdownHook(rm(new java.io.File(base))): Unit
           val dir = s"$base/call_$n"
           raw.write.mode("overwrite").parquet(dir)
-          s.read.parquet(dir)
+          // The schema just written: reading it back needs no inference job.
+          s.read.schema(raw.schema).parquet(dir)
         }
         else if (pinSigs) raw.localCheckpoint()
         else raw

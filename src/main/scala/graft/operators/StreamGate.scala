@@ -5,6 +5,7 @@ import graft.streaming.{Nexmark, StatefulProcessors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Hard-gate entries whose SPARK SIDE executes through
   * `transformWithState` (RocksDB state store, checkpointed restarts
@@ -72,33 +73,53 @@ object StreamGate {
     * (StatefulProcessors sortBy (tsUs, ...)), and the rest are
     * commutative by design (the interleaved-chunk gates prove exactly
     * that).
+    *
+    * `unionAll` is positional, so every chunk is first selected by chunk
+    * 0's column names; a chunk whose columns or types differ (nullability
+    * aside) fails here, naming the chunk. One file per `_ck` partition
+    * also rests on `spark.sql.files.maxRecordsPerFile` being unset (0): a
+    * session that sets it splits a chunk into several files, which
+    * `promoteChunk` rejects.
     */
-  private def stageChunks(s: SparkSession, stage: String,
-      chunks: Seq[DataFrame]): Unit =
+  private[graft] def stageChunks(s: SparkSession, stage: String,
+      chunks: Seq[DataFrame]): Unit = {
+    val head = chunks.head.schema
     chunks.zipWithIndex
-      .map { case (c, i) => c.withColumn("_ck", lit(i)) }
+      .map { case (c, i) =>
+        val types = c.schema.fields.map(f => f.name -> f.dataType).toMap
+        require(c.schema.length == head.length && head.forall(f =>
+          types.get(f.name).exists(t => DataType.equalsStructurally(
+            t, f.dataType, ignoreNullability = true))),
+          s"stw chunk $i has schema ${c.schema.simpleString}; chunk 0 has " +
+          s"${head.simpleString} (columns are matched by name)")
+        c.select(head.fieldNames.map(n => col(s"`$n`")).toSeq: _*)
+          .withColumn("_ck", lit(i))
+      }
       .reduce(_.unionAll(_))
       .coalesce(1)
       .write.partitionBy("_ck").mode("overwrite").parquet(stage)
+  }
 
-  /** Move chunk `i`'s staged file(s) into the live source dir. A chunk
-    * that produced no rows (possible at tiny SFs) gets the same empty
-    * single parquet file the old per-chunk coalesce(1) write produced,
-    * so run-level semantics (one new file per run) are unchanged.
+  /** Move chunk `i`'s staged file into the live source dir. A chunk that
+    * produced no rows (possible at tiny SFs) gets the same empty single
+    * parquet file the old per-chunk coalesce(1) write produced, so
+    * run-level semantics (one new file per run) are unchanged.
     */
-  private def promoteChunk(s: SparkSession, stage: String, in: String,
-      i: Int, schema: org.apache.spark.sql.types.StructType): Unit = {
+  private[graft] def promoteChunk(s: SparkSession, stage: String, in: String,
+      i: Int, schema: StructType): Unit = {
     new java.io.File(in).mkdirs()
     val dir = new java.io.File(s"$stage/_ck=$i")
     val files = Option(dir.listFiles()).map(_.toSeq.filter(f =>
       f.isFile && f.getName.endsWith(".parquet"))).getOrElse(Seq.empty)
+    require(files.size <= 1, s"stw chunk $i staged ${files.size} parquet " +
+      "files, not one: a replay run must drain exactly one new file, and " +
+      "coalesce(1) yields one only while spark.sql.files.maxRecordsPerFile " +
+      "is unset (0)")
     if (files.isEmpty)
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         schema).coalesce(1).write.mode("append").parquet(in)
-    else files.zipWithIndex.foreach { case (f, j) =>
-      java.nio.file.Files.move(f.toPath,
-        java.nio.file.Paths.get(in, f"chunk${i}%03d_$j.parquet")): Unit
-    }
+    else java.nio.file.Files.move(files.head.toPath,
+      java.nio.file.Paths.get(in, f"chunk$i%03d.parquet")): Unit
   }
 
   private val liveDirs =
@@ -167,7 +188,7 @@ object StreamGate {
         statePartitions(s, dirBytes(stage)))
       if (trace) System.err.println(
         f"[stw-trace] $tag stage=${(System.nanoTime() - tS) / 1e9}%.2f s")
-      chunks.zipWithIndex.foreach { case (_, i) =>
+      val outSchema = chunks.indices.map { i =>
         val t0 = System.nanoTime()
         promoteChunk(s, stage, in, i, schema)
         val t1 = System.nanoTime()
@@ -206,10 +227,13 @@ object StreamGate {
               s"rows=${p.numInputRows} durations=${p.durationMs} $st")
           }
         }
-      }
+        sunk.schema
+      }.last
       injectAcc.foreach(a => System.err.println(
         s"[stw] '$tag' injected-failure retries survived: ${a.value}"))
-      s.read.parquet(out).localCheckpoint()
+      // The sink's schema is the query's: reading it back needs no
+      // inference job.
+      s.read.schema(outSchema).parquet(out).localCheckpoint()
     } finally {
       saved match {
         case Some(v) =>

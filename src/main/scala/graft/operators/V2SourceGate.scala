@@ -82,21 +82,25 @@ object V2SourceGate {
         StreamGate.statePartitions(s, segments.last.totalEvents * 32L))
       s.conf.set("spark.sql.streaming.stateStore.providerClass", Rocks)
       val trace = sys.env.get("SPARK_GRAFT_STW_TRACE").contains("1")
-      segments.zipWithIndex.foreach { case (seg, i) =>
+      val outSchema = segments.zipWithIndex.map { case (seg, i) =>
         val t0 = System.nanoTime()
         val ids = NexmarkV2.ids(s, seg.totalEvents,
           rowsPerTrigger = Some(seg.rowsPerTrigger), numPartitions = 4)
-        val q = tf(ids).writeStream.format("parquet")
+        val sunk = tf(ids)
+        val q = sunk.writeStream.format("parquet")
           .option("path", out).option("checkpointLocation", ckpt)
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         require(q.awaitTermination(180000),
           s"v2 replay '$tag' did not drain a segment in 180s")
         if (trace) System.err.println(
           f"[stw-trace] v2_$tag run$i drain=${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
+        sunk.schema
+      }.last
       injectAcc.foreach(a => System.err.println(
         s"[stw] 'v2_$tag' injected-failure retries survived: ${a.value}"))
-      s.read.parquet(out).localCheckpoint()
+      // The sink's schema is the query's: reading it back needs no
+      // inference job.
+      s.read.schema(outSchema).parquet(out).localCheckpoint()
     } finally {
       saved match {
         case Some(v) =>

@@ -1,0 +1,80 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+
+import graft.operators.{Pipeline, StreamGate}
+import org.apache.commons.io.FileUtils
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Contracts of the tmp-parquet materializations: p71's per-call signature
+  * pins stay bounded, and stw chunk staging aligns chunks by name and
+  * stages one file per chunk.
+  */
+class MaterializationSpec extends AnyFunSuite with BeforeAndAfterAll {
+  private val tmpDirs = scala.collection.mutable.ArrayBuffer.empty[File]
+  private def tmp(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix).toFile
+    tmpDirs += d
+    d.toString
+  }
+  override def afterAll(): Unit = tmpDirs.foreach(FileUtils.deleteQuietly)
+  private val sf = "/root/testdata/sf0.001"
+  private lazy val spark = SparkTestSession.spark
+
+  private def callDirs(): Seq[String] =
+    Option(new File(Pipeline.p71PinBase).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("call_")).sorted
+
+  test("three p71 calls leave at most two call dirs, the last two alive") {
+    val frames = (1 to 3).map(_ =>
+      Pipeline.p71Body(spark, sf, pinSigs = false, parquetPin = true))
+    val dirs = callDirs()
+    assert(dirs.size <= 2, s"p71 call dirs: $dirs")
+    // DeterminismSpec holds two invocations side by side: both still read.
+    val Seq(a, b) = frames.takeRight(2)
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+  }
+
+  test("stw chunks are staged by column name, one file per chunk") {
+    import spark.implicits._
+    val stage = tmp("graft_stage")
+    val c0 = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    val c1 = Seq(("c", 3L)).toDF("v", "k")
+    StreamGate.stageChunks(spark, s"$stage/ok", Seq(c0, c1))
+    val staged = spark.read.parquet(s"$stage/ok")
+    assert(staged.where("_ck = 1").select("k", "v").as[(Long, String)].collect()
+      .toSeq == Seq((3L, "c")))
+    val in = tmp("graft_in")
+    StreamGate.promoteChunk(spark, s"$stage/ok", in, 0, c0.schema)
+    assert(new File(in).list().count(_.endsWith(".parquet")) == 1)
+  }
+
+  test("a chunk whose schema differs fails, naming the chunk") {
+    import spark.implicits._
+    val stage = tmp("graft_stage")
+    val c0 = Seq((1L, "a")).toDF("k", "v")
+    val e = intercept[IllegalArgumentException](StreamGate.stageChunks(
+      spark, stage, Seq(c0, Seq((2, "b")).toDF("k", "v"))))
+    assert(e.getMessage.contains("stw chunk 1"))
+    intercept[IllegalArgumentException](StreamGate.stageChunks(
+      spark, stage, Seq(c0, Seq((2L, "b")).toDF("k", "w"))))
+  }
+
+  test("a chunk split over several files by maxRecordsPerFile is rejected") {
+    import spark.implicits._
+    val stage = tmp("graft_stage")
+    val c0 = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
+    val key = "spark.sql.files.maxRecordsPerFile"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "1")
+      StreamGate.stageChunks(spark, stage, Seq(c0))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val in = tmp("graft_in")
+    val e = intercept[IllegalArgumentException](
+      StreamGate.promoteChunk(spark, stage, in, 0, c0.schema))
+    assert(e.getMessage.contains("maxRecordsPerFile"))
+  }
+}
