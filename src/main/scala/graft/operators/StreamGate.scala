@@ -27,39 +27,37 @@ object StreamGate {
   private val Rocks = "org.apache.spark.sql.execution.streaming.state." +
     "RocksDBStateStoreProvider"
 
-  /** Right-size the stateful shuffle for a replay (guide §2.2/§2.4:
-    * derive partitioning from input volume, not core count). One shuffle
-    * partition = one state-store instance per stateful operator, and
-    * EVERY micro-batch — data or no-data — pays a RocksDB load + commit
-    * per instance, so at gate replay volumes (single-digit MB of input)
-    * a core-count partitioning spends the entry on store lifecycle
-    * syscalls instead of compute. Sizing: ~32 MB of replay input per
-    * state partition, floor 4 (the generators' own parallelism), capped
-    * at the session's core count so a large replay still spreads. The
-    * first micro-batch pins the choice in the checkpoint's offset
-    * metadata, so every restart run agrees by construction, and the
-    * processors are per-key (groupByKey) — the partition count cannot
-    * change any emitted row. SPARK_GRAFT_STW_PARTS overrides for
-    * capacity experiments; production sizing rationale in
-    * OPTIMIZATION_r14.md.
+  /** Right-size the stateful shuffle for a replay from its input volume:
+    * one state partition per started 32 MB of input, at least 1, at most
+    * the session's core count so a large replay still spreads.
+    *
+    * One shuffle partition is one state-store instance per stateful
+    * operator, and every micro-batch (data or no-data) pays a RocksDB load
+    * and commit per instance. A gate replay moves well under 32 MB, so it
+    * drains through a single store; any fixed floor above 1 only multiplies
+    * the store lifecycle cost, since the read side's parallelism is the
+    * source's, not the state's. The first micro-batch pins the choice in
+    * the checkpoint's offset metadata, so every restart run agrees, and the
+    * processors are per-key (groupByKey), so the partition count cannot
+    * change any emitted row.
     */
-  private[operators] def statePartitions(s: org.apache.spark.sql.SparkSession,
-      inputBytes: Long): Int =
-    // Malformed override (empty string, "8 ") falls back to the computed
-    // sizing instead of aborting the gate mid-entry (r14 advice item).
-    sys.env.get("SPARK_GRAFT_STW_PARTS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ > 0)
-      .getOrElse {
-        val cap = math.max(4, s.sparkContext.defaultParallelism)
-        val per = 32L << 20
-        math.max(4L, math.min(cap.toLong, (inputBytes + per - 1) / per)).toInt
-      }
+  private[graft] def statePartitions(s: SparkSession, inputBytes: Long): Int = {
+    val per = 32L << 20
+    val cores = s.sparkContext.defaultParallelism.toLong
+    math.max(1L, math.min(cores, (inputBytes + per - 1) / per)).toInt
+  }
 
-  private[operators] def dirBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      else f.length()
-    walk(new java.io.File(path))
+  /** Bytes of every file under `path`, checksum files included: a
+    * checksumming file system (the local one) hides its `.crc` files from
+    * listings, so the count is taken on the raw file system beneath it.
+    */
+  private[graft] def dirBytes(s: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
+    fs.getContentSummary(p).getLength
   }
 
   /** Write every chunk in ONE job (r15, guide §2.4/§6): the chunks are
@@ -151,9 +149,6 @@ object StreamGate {
     val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
     val saved = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     val savedParts = s.conf.getOption("spark.sql.shuffle.partitions")
-    val ChangelogKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    val savedChangelog = s.conf.getOption(ChangelogKey)
     // SPARK_GRAFT_INJECT_STW=1 runs the WHOLE gate under mid-batch
     // task-failure injection (graft.streaming.FailureInjection): partition
     // 0 of every stateful stage dies on its first attempt after partial
@@ -173,8 +168,6 @@ object StreamGate {
       // Conf sets live INSIDE the try (r14 advice): anything throwing
       // between a set and the try entry would leak the conf past the gate.
       s.conf.set("spark.sql.streaming.stateStore.providerClass", Rocks)
-      if (sys.env.get("SPARK_GRAFT_STW_CHANGELOG").contains("1"))
-        s.conf.set(ChangelogKey, "true")
       val schema = chunks.head.schema
       val trace = sys.env.get("SPARK_GRAFT_STW_TRACE").contains("1")
       val stage = s"$base/stage"
@@ -185,22 +178,14 @@ object StreamGate {
       // chunk count); must happen before the FIRST run, which pins the
       // partitioning in the checkpoint.
       s.conf.set("spark.sql.shuffle.partitions",
-        statePartitions(s, dirBytes(stage)))
+        statePartitions(s, dirBytes(s, stage)))
       if (trace) System.err.println(
         f"[stw-trace] $tag stage=${(System.nanoTime() - tS) / 1e9}%.2f s")
       val outSchema = chunks.indices.map { i =>
         val t0 = System.nanoTime()
         promoteChunk(s, stage, in, i, schema)
         val t1 = System.nanoTime()
-        // SPARK_GRAFT_STW_SINK1=1: narrow the sink to one file per batch
-        // (coalesce(1) AFTER the stateful operator — its partitioning is
-        // checkpoint-pinned and unaffected). A/B knob for the per-batch
-        // sink-commit cost; measurement in OPTIMIZATION_r15.md.
-        val body = tf(s.readStream.schema(schema).parquet(in))
-        val sunk =
-          if (sys.env.get("SPARK_GRAFT_STW_SINK1").contains("1"))
-            body.coalesce(1)
-          else body
+        val sunk = tf(s.readStream.schema(schema).parquet(in))
         val q = sunk
           .writeStream.format("parquet")
           .option("path", out).option("checkpointLocation", ckpt)
@@ -244,10 +229,6 @@ object StreamGate {
       savedParts match {
         case Some(v) => s.conf.set("spark.sql.shuffle.partitions", v)
         case None => s.conf.unset("spark.sql.shuffle.partitions")
-      }
-      savedChangelog match {
-        case Some(v) => s.conf.set(ChangelogKey, v)
-        case None => s.conf.unset(ChangelogKey)
       }
     }
   }
@@ -687,7 +668,7 @@ object StreamGate {
         // Same input-volume state-partition sizing as replay (see
         // statePartitions): set before the manual-clock query starts.
         s.conf.set("spark.sql.shuffle.partitions",
-          statePartitions(s, dirBytes(stageDir) + dirBytes(in)))
+          statePartitions(s, dirBytes(s, stageDir) + dirBytes(s, in)))
         val clock = new org.apache.spark.sql.graft.shims.GraftManualClock(t0)
         // SPARK_GRAFT_INJECT_STW=1 injects here too (same contract as
         // replay): the manual-clock path otherwise escapes the gate-wide

@@ -74,10 +74,11 @@ object V2SourceGate {
     try {
       // Conf sets live INSIDE the try (r14 advice): anything throwing
       // between a set and the try entry would leak the conf past the gate.
-      // Input-volume state-partition sizing, same rationale as
-      // StreamGate.statePartitions: the V2 id range is known exactly up
-      // front (segments.last.totalEvents ids × ~32 B of projected event
-      // row), and the first micro-batch pins the choice in the checkpoint.
+      // Input-volume state-partition sizing (StreamGate.statePartitions):
+      // the V2 id range is known exactly up front, so the input is
+      // estimated as segments.last.totalEvents ids × ~32 B of projected
+      // event row (3.2 MB, one partition, at the catalog's 100k events).
+      // The first micro-batch pins the choice in the checkpoint.
       s.conf.set("spark.sql.shuffle.partitions",
         StreamGate.statePartitions(s, segments.last.totalEvents * 32L))
       s.conf.set("spark.sql.streaming.stateStore.providerClass", Rocks)
