@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.Q
-import graft.streaming.{Nexmark, StatefulProcessors}
+import graft.streaming.{Nexmark, ReplayConfs, StatefulProcessors}
+import graft.streaming.ReplayConfs.withConfs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -24,9 +25,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * guaranteed by time-ordered chunk predicates.
   */
 object StreamGate {
-  private val Rocks = "org.apache.spark.sql.execution.streaming.state." +
-    "RocksDBStateStoreProvider"
-
   /** Right-size the stateful shuffle for a replay from its input volume:
     * one state partition per started 32 MB of input, at least 1, at most
     * the session's core count so a large replay still spreads.
@@ -147,8 +145,6 @@ object StreamGate {
       sys.addShutdownHook(
         liveDirs.forEach(d => rmrf(new java.io.File(d)))): Unit
     val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
-    val saved = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val savedParts = s.conf.getOption("spark.sql.shuffle.partitions")
     // SPARK_GRAFT_INJECT_STW=1 runs the WHOLE gate under mid-batch
     // task-failure injection (graft.streaming.FailureInjection): partition
     // 0 of every stateful stage dies on its first attempt after partial
@@ -164,23 +160,16 @@ object StreamGate {
         graft.streaming.FailureInjection.failFirstAttempt(transform(df), a)
       case None => transform(df)
     }
-    try {
-      // Conf sets live INSIDE the try (r14 advice): anything throwing
-      // between a set and the try entry would leak the conf past the gate.
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", Rocks)
-      val schema = chunks.head.schema
-      val trace = sys.env.get("SPARK_GRAFT_STW_TRACE").contains("1")
-      val stage = s"$base/stage"
-      val tS = System.nanoTime()
-      stageChunks(s, stage, chunks)
-      // Size the stateful shuffle from measured input volume — now the
-      // EXACT staged byte count (the pre-r15 estimate was first chunk ×
-      // chunk count); must happen before the FIRST run, which pins the
-      // partitioning in the checkpoint.
-      s.conf.set("spark.sql.shuffle.partitions",
-        statePartitions(s, dirBytes(s, stage)))
-      if (trace) System.err.println(
-        f"[stw-trace] $tag stage=${(System.nanoTime() - tS) / 1e9}%.2f s")
+    val schema = chunks.head.schema
+    val trace = sys.env.get("SPARK_GRAFT_STW_TRACE").contains("1")
+    val stage = s"$base/stage"
+    val tS = System.nanoTime()
+    stageChunks(s, stage, chunks)
+    // Size the stateful shuffle from the exact staged byte count.
+    val parts = statePartitions(s, dirBytes(s, stage))
+    if (trace) System.err.println(
+      f"[stw-trace] $tag stage=${(System.nanoTime() - tS) / 1e9}%.2f s")
+    withConfs(s, ReplayConfs.replay(parts): _*) {
       val outSchema = chunks.indices.map { i =>
         val t0 = System.nanoTime()
         promoteChunk(s, stage, in, i, schema)
@@ -219,17 +208,6 @@ object StreamGate {
       // The sink's schema is the query's: reading it back needs no
       // inference job.
       s.read.schema(outSchema).parquet(out).localCheckpoint()
-    } finally {
-      saved match {
-        case Some(v) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      savedParts match {
-        case Some(v) => s.conf.set("spark.sql.shuffle.partitions", v)
-        case None => s.conf.unset("spark.sql.shuffle.partitions")
-      }
     }
   }
 
@@ -655,20 +633,15 @@ object StreamGate {
         sys.addShutdownHook(
           liveDirs.forEach(d => rmrf(new java.io.File(d)))): Unit
       val (in, ckpt) = (s"$base/in", s"$base/ckpt")
-      val saved =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      val savedParts = s.conf.getOption("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", Rocks)
-      val out = try {
-        val schema = chunks.head.schema
-        // Single-pass chunk staging + per-step promote, same as replay.
-        val stageDir = s"$base/stage"
-        stageChunks(s, stageDir, chunks)
-        promoteChunk(s, stageDir, in, 0, schema)
-        // Same input-volume state-partition sizing as replay (see
-        // statePartitions): set before the manual-clock query starts.
-        s.conf.set("spark.sql.shuffle.partitions",
-          statePartitions(s, dirBytes(s, stageDir) + dirBytes(s, in)))
+      val schema = chunks.head.schema
+      // Single-pass chunk staging + per-step promote, same as replay.
+      val stageDir = s"$base/stage"
+      stageChunks(s, stageDir, chunks)
+      promoteChunk(s, stageDir, in, 0, schema)
+      // Same input-volume state-partition sizing as replay (see
+      // statePartitions): set before the manual-clock query starts.
+      val parts = statePartitions(s, dirBytes(s, stageDir) + dirBytes(s, in))
+      val out = withConfs(s, ReplayConfs.replay(parts): _*) {
         val clock = new org.apache.spark.sql.graft.shims.GraftManualClock(t0)
         // SPARK_GRAFT_INJECT_STW=1 injects here too (same contract as
         // replay): the manual-clock path otherwise escapes the gate-wide
@@ -701,17 +674,6 @@ object StreamGate {
           s"[stw] 'q12gap' injected-failure retries survived: ${a.value}"))
         rows().map(r => (r.getInt(0), ((r.getLong(1) - t0) / stepMs).toInt,
           r.getLong(2) - r.getLong(1), r.getLong(3)))
-      } finally {
-        saved match {
-          case Some(v) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        savedParts match {
-          case Some(v) => s.conf.set("spark.sql.shuffle.partitions", v)
-          case None => s.conf.unset("spark.sql.shuffle.partitions")
-        }
       }
       out.toDF("bidder", "win_batch", "win_len_ms", "n_bids")
         .orderBy(col("bidder"), col("win_batch"))

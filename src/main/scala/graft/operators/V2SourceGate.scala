@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.Q
 import graft.sources.NexmarkV2
-import graft.streaming.{Nexmark, StatefulProcessors}
+import graft.streaming.{Nexmark, ReplayConfs, StatefulProcessors}
+import graft.streaming.ReplayConfs.withConfs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -27,9 +28,6 @@ import org.apache.spark.sql.streaming.Trigger
   * chunk predicates.
   */
 object V2SourceGate {
-  private val Rocks = "org.apache.spark.sql.execution.streaming.state." +
-    "RocksDBStateStoreProvider"
-
   private val liveDirs =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private val hookArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -60,8 +58,6 @@ object V2SourceGate {
       sys.addShutdownHook(
         liveDirs.forEach(d => rmrf(new java.io.File(d)))): Unit
     val (out, ckpt) = (s"$base/out", s"$base/ckpt")
-    val saved = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val savedParts = s.conf.getOption("spark.sql.shuffle.partitions")
     val injectAcc =
       if (sys.env.get("SPARK_GRAFT_INJECT_STW").contains("1"))
         Some(s.sparkContext.longAccumulator(s"graft_inject_v2_$tag"))
@@ -71,17 +67,12 @@ object V2SourceGate {
         graft.streaming.FailureInjection.failFirstAttempt(transform(df), a)
       case None => transform(df)
     }
-    try {
-      // Conf sets live INSIDE the try (r14 advice): anything throwing
-      // between a set and the try entry would leak the conf past the gate.
-      // Input-volume state-partition sizing (StreamGate.statePartitions):
-      // the V2 id range is known exactly up front, so the input is
-      // estimated as segments.last.totalEvents ids × ~32 B of projected
-      // event row (3.2 MB, one partition, at the catalog's 100k events).
-      // The first micro-batch pins the choice in the checkpoint.
-      s.conf.set("spark.sql.shuffle.partitions",
-        StreamGate.statePartitions(s, segments.last.totalEvents * 32L))
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", Rocks)
+    // Input-volume state-partition sizing (StreamGate.statePartitions):
+    // the V2 id range is known exactly up front, so the input is
+    // estimated as segments.last.totalEvents ids × ~32 B of projected
+    // event row (3.2 MB, one partition, at the catalog's 100k events).
+    val parts = StreamGate.statePartitions(s, segments.last.totalEvents * 32L)
+    withConfs(s, ReplayConfs.replay(parts): _*) {
       val trace = sys.env.get("SPARK_GRAFT_STW_TRACE").contains("1")
       val outSchema = segments.zipWithIndex.map { case (seg, i) =>
         val t0 = System.nanoTime()
@@ -102,17 +93,6 @@ object V2SourceGate {
       // The sink's schema is the query's: reading it back needs no
       // inference job.
       s.read.schema(outSchema).parquet(out).localCheckpoint()
-    } finally {
-      saved match {
-        case Some(v) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      savedParts match {
-        case Some(v) => s.conf.set("spark.sql.shuffle.partitions", v)
-        case None => s.conf.unset("spark.sql.shuffle.partitions")
-      }
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.streaming.ReplayConfs.{RocksState, SharedClassLoader, withConfs}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -504,9 +505,6 @@ object StreamFuzz {
 
   // ---- replay machinery (the StreamGate pattern + random restarts) ----
 
-  private val Rocks = "org.apache.spark.sql.execution.streaming.state." +
-    "RocksDBStateStoreProvider"
-
   private def rmrf(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
     f.delete(): Unit
@@ -517,17 +515,6 @@ object StreamFuzz {
       s"graft_streamfuzz_${tag}_${ProcessHandle.current().pid()}")
       .toAbsolutePath.toString
     rmrf(new java.io.File(p)); p
-  }
-
-  private def withRocks[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(key)
-    s.conf.set(key, Rocks)
-    try body
-    finally saved match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
   }
 
   /** Land one chunk as one file `in/cNNNN.parquet` with a strictly
@@ -584,7 +571,7 @@ object StreamFuzz {
     val base = baseDir(tag)
     val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
     new java.io.File(in).mkdirs()
-    withRocks(s) {
+    withConfs(s, RocksState, SharedClassLoader) {
       val schema = chunks.head.schema
       var outSchema: org.apache.spark.sql.types.StructType = null
       def drain(): Unit = {
@@ -844,7 +831,7 @@ object StreamFuzz {
     val groups = scn.params("groups")
     val base = baseDir(s"v2s${scn.seed}")
     val (out, ckpt) = (s"$base/out", s"$base/ckpt")
-    val result = withRocks(s) {
+    val result = withConfs(s, RocksState, SharedClassLoader) {
       var outSchema: org.apache.spark.sql.types.StructType = null
       segs.foreach { seg =>
         val ids = graft.sources.NexmarkV2.ids(s, seg.endOffset,
@@ -1125,7 +1112,7 @@ object StreamFuzz {
     val base = baseDir(s"gw${scn.seed}")
     val (in, ckpt) = (s"$base/in", s"$base/ckpt")
     new java.io.File(in).mkdirs()
-    val out = withRocks(s) {
+    val out = withConfs(s, RocksState, SharedClassLoader) {
       val schema = chunks.head.schema
       landChunk(chunks.head, in, 0)
       val clock =
