@@ -196,13 +196,7 @@ object Tables {
       // The materialized views live for this JVM only (the cache key is
       // per-process); without cleanup every Verify/Bench/test JVM leaks a
       // multi-MB dir into /tmp until the disk fills.
-      sys.addShutdownHook {
-        def rm(p: java.io.File): Unit = {
-          Option(p.listFiles).foreach(_.foreach(rm))
-          p.delete(): Unit
-        }
-        rm(base.toFile)
-      }
+      graft.streaming.Replay.deleteOnExit(base.toString)
       // partsupp derives from the RAW lineitem view; register raw first.
       load(spark, dir, "lineitem").createOrReplaceTempView("lineitem")
       spark.sql(partsuppSpark).write.parquet(s"$base/partsupp")

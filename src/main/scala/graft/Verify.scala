@@ -78,7 +78,7 @@ object Verify {
       // real cluster runs maxFailures=4; local mode's 1 is the outlier).
       // Deterministic failures still fail — a retry re-hits them — and it
       // lets SPARK_GRAFT_INJECT_STW=1 run the whole gate under mid-batch
-      // task-failure injection (StreamGate.replay).
+      // task-failure injection (graft.streaming.Replay.injecting).
       .master(s"local[$cpus,2]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Q
-import graft.streaming.{Nexmark, StreamQueries, Ysb}
+import graft.streaming.{Nexmark, Replay, StreamQueries, Ysb}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
@@ -28,8 +28,6 @@ import org.apache.spark.sql.types.TimestampType
   * non-negative sums here).
   */
 object NexmarkBatch {
-  private val q10HookArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
-
   /** Fixed replay length; Verify dumps the generator tables at the same N
     * so the DuckDB oracles replay identical data. SPARK_GRAFT_NX_N
     * overrides for scale runs (the generator, every nx/stw entry, and the
@@ -77,27 +75,8 @@ object NexmarkBatch {
     */
   def q10FileSink(s: SparkSession): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val base = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"),
-      s"graft_q10_sink_${ProcessHandle.current().pid()}")
-      .toAbsolutePath.toString
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
-      f.delete()
-    }
-    rmrf(new java.io.File(base))
-    // pid-suffixed dirs are invisible to the next process's wipe — remove
-    // this one at exit (registered once per JVM).
-    if (q10HookArmed.compareAndSet(false, true))
-      sys.addShutdownHook(rmrf(new java.io.File(base))): Unit
+    val base = Replay.scratch("q10_sink")
     val (inDir, outDir, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
-    val trace = sys.env.get("SPARK_GRAFT_STW_TRACE").contains("1")
-    var t0 = System.nanoTime()
-    def mark(phase: String): Unit = {
-      if (trace) System.err.println(
-        f"[stw-trace] q10 $phase ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     // Landing stays at the generator's 8 range partitions: an r15 probe
     // of guide-§6 file sizing (coalesce to ~128 MB targets — one file at
     // this N) read WORSE warm (2.9–3.2 s vs 1.7–2.0 s): the single task
@@ -106,7 +85,6 @@ object NexmarkBatch {
     // the per-file overhead saved. Numbers in OPTIMIZATION_r15.md.
     val landed = bids(s)
     landed.write.mode("overwrite").parquet(inDir)
-    mark("input_write")
     // The schema just written: the stream needs no inference job.
     val shaped = s.readStream.schema(landed.schema)
       .parquet(inDir)
@@ -119,22 +97,16 @@ object NexmarkBatch {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     require(q.awaitTermination(120000), "q10 file sink did not drain in 120s")
-    mark("drain")
-    if (trace) q.recentProgress.foreach(p => System.err.println(
-      s"[stw-trace] q10   batch=${p.batchId} rows=${p.numInputRows} " +
-      s"durations=${p.durationMs}"))
     // Explicit casts pin the output schema against partition-type
     // inference; localCheckpoint pins the VALUES eagerly — the returned
     // frame must stay valid after a later call wipes and rewrites the
     // sink dir (DeterminismSpec holds two invocations side by side).
-    val out = s.read.parquet(outDir).select(
+    s.read.parquet(outDir).select(
       col("auction"), col("bidder"), col("price"),
       unix_micros(col("b_date_time")).as("b_date_time"),
       col("b_date").cast("string").as("b_date"),
       col("b_hour").cast("long").as("b_hour"))
       .localCheckpoint()
-    mark("reread_pin")
-    out
   }
 
   val all: Seq[Q] = Seq(

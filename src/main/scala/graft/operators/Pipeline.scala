@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Catalog, Q, Tables}
 import graft.functions.VectorFunctions
+import graft.streaming.Replay
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2472,49 +2473,6 @@ object Pipeline {
         .orderBy($"rank".desc, $"node").limit(20)
   }
 
-  /** Probe hook: time p42's phases separately (graph build / pins /
-    * rounds) — dev tooling for `graft.Probe <dir> - p42`. */
-  private[graft] def graphAuthorityProbe(s: SparkSession, d: String,
-      time: String => (=> Long) => Unit): Unit = {
-    import s.implicits._
-    val pairs = T(s, d, "lineitem").select($"l_orderkey", $"l_suppkey")
-      .join(T(s, d, "orders").select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .select(($"o_custkey" * 2).as("cnode"),
-        ($"l_suppkey" * 2 + 1).as("snode"))
-      .distinct()
-    time("p42.pairs_distinct")(pairs.count())
-    var edges: DataFrame = null
-    time("p42.edges_pin") {
-      edges = pin(pairs.select($"cnode".as("src"), $"snode".as("dst"))
-        .unionAll(pairs.select($"snode".as("src"), $"cnode".as("dst")))
-        .repartition($"dst"))
-      edges.count()
-    }
-    var deg: DataFrame = null
-    var nNodes = 0L
-    time("p42.deg_pin_count") {
-      deg = pin(edges.groupBy($"src").agg(count(lit(1)).as("outdeg")))
-      nNodes = deg.count(); nNodes
-    }
-    val hint: DataFrame => DataFrame =
-      if (nNodes <= (1L << 21)) broadcast else identity
-    var rank = deg.select($"src".as("node"), $"outdeg",
-      lit(1000000L).as("rank"))
-    for (i <- 1 to 3) {
-      val inc = edges
-        .join(hint(rank.select($"node".as("src"), $"outdeg", $"rank")), "src")
-        .select($"dst", expr("rank div outdeg").as("c"))
-        .groupBy($"dst").agg(sum($"c").as("inc"))
-      rank = deg.select($"src".as("node"), $"outdeg")
-        .join(hint(inc.withColumnRenamed("dst", "node")), Seq("node"), "left")
-        .select($"node", $"outdeg",
-          (lit(150000L) + expr("(85 * coalesce(inc, 0L)) div 100")).as("rank"))
-      val r = rank
-      time(s"p42.cum_rounds_1to$i")(r.count())
-    }
-  }
-
   private val p42 = Q(
     "p42_graph_authority",
     (s, d) => graphAuthority(s, d),
@@ -4257,46 +4215,6 @@ object Pipeline {
     labels
   }
 
-  /** Stage decomposition of p61 (see Probe "p61"): where do the seconds
-    * go — basket expansion + edge threshold, the label init, or the three
-    * propagation rounds?
-    */
-  private[graft] def labelPropProbe(s: SparkSession, d: String,
-      time: String => (=> Long) => Unit): Unit = {
-    import s.implicits._
-    val byOrd = T(s, d, "lineitem").groupBy($"l_orderkey")
-      .agg(sort_array(collect_set($"l_partkey")).as("pks"))
-    val pairs = byOrd
-      .select(posexplode($"pks").as(Seq("i", "u")), $"pks")
-      .select($"u", explode(expr("slice(pks, i + 2, size(pks))")).as("v"))
-    time("p61.byOrd_only")(byOrd.count())
-    time("p61.pairs_only")(pairs.count())
-    var e: DataFrame = null
-    time("p61.edges_pin") {
-      e = pin(pairs.groupBy($"u", $"v").agg(count(lit(1)).as("cw"))
-        .filter($"cw" >= 2).select($"u", $"v"))
-      e.count()
-    }
-    val adj = e.select($"u".as("n"), $"v".as("m"))
-      .unionAll(e.select($"v".as("n"), $"u".as("m")))
-    var labels = adj.select($"n".as("id")).distinct()
-      .select($"id", $"id".as("label"))
-    time("p61.labels_init")(labels.count())
-    for (r <- 1 to 3) {
-      val cnts = adj.join(labels.select($"id".as("m"), $"label"), "m")
-        .groupBy($"n", $"label").agg(count(lit(1)).as("c"))
-      time(s"p61.round$r") {
-        labels = pin(cnts
-          .groupBy($"n")
-          .agg(min(struct((-$"c").as("nc"), $"label")).as("top"))
-          .select($"n".as("id"), $"top.label".as("label")))
-        labels.count()
-      }
-    }
-    time("p61.final_rollup")(labels.groupBy($"label")
-      .agg(count(lit(1)).as("csize")).count())
-  }
-
   /** p66 — embedding covariance structure: the top-20 most-correlated
     * dimension pairs by |covariance numerator| n·Σxᵢxⱼ − Σxᵢ·Σxⱼ (the
     * covariance times n², so ranking is identical with zero division) —
@@ -4552,88 +4470,54 @@ object Pipeline {
     * generates candidates, the verify join touches candidate pairs only);
     * the calibration rollup partial-combines to ≤ k rows.
     */
-  private val p71HookArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
   private val p71CallSeq = new java.util.concurrent.atomic.AtomicLong(0L)
   /** Per-pid tmp dir holding p71's per-call `call_n` signature pins. */
-  private[graft] def p71PinBase: String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_p71_sigs_${ProcessHandle.current().pid()}").toAbsolutePath.toString
+  private[graft] def p71PinBase: String = Replay.scratchDir("p71_sigs")
 
-  /** p71's body, with the sigs pin exposed for the Probe p71shape A/B
-    * (pinSigs = compute the shingle+minhash expression once and reuse it
-    * for candidate generation and both verify-join sides, instead of 3
-    * plan-level re-derivations).
-    */
-  private[graft] def p71Body(s: SparkSession, d: String,
-      pinSigs: Boolean, parquetPin: Boolean = false): DataFrame = {
-      import s.implicits._
-      val raw = sigsDf(s, d, 4)
-      val sigs =
-        if (parquetPin) {
-          // Durable-form reuse (the p08 comment's "checkpoint to parquet"):
-          // materialize the signature table once per call to a pid-suffixed
-          // tmp dir (wiped per call — nothing survives across invocations)
-          // and read it back, which also hands the planner REAL size stats
-          // for the verify joins instead of a localCheckpoint's
-          // defaultSizeInBytes.
-          val base = p71PinBase
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete(): Unit
-          }
-          // Per-CALL subdir, never overwritten: a frame returned by an
-          // earlier invocation keeps its resolved file listing valid while
-          // a later invocation materializes its own pin (DeterminismSpec
-          // holds two invocations side by side — an in-place overwrite
-          // left frame 1 pointing at deleted part files). Only the last
-          // two calls' dirs stay alive: minting call_n deletes call_{n-2},
-          // so the tmp footprint is at most two signature tables. The pid
-          // base is wiped once per JVM (stale pid-reuse) and at exit (same
-          // discipline as the stw gates).
-          val n = p71CallSeq.getAndIncrement()
-          if (n == 0L) rm(new java.io.File(base))
-          else if (n >= 2L) rm(new java.io.File(s"$base/call_${n - 2}"))
-          if (p71HookArmed.compareAndSet(false, true))
-            sys.addShutdownHook(rm(new java.io.File(base))): Unit
-          val dir = s"$base/call_$n"
-          raw.write.mode("overwrite").parquet(dir)
-          // The schema just written: reading it back needs no inference job.
-          s.read.schema(raw.schema).parquet(dir)
-        }
-        else if (pinSigs) raw.localCheckpoint()
-        else raw
-      val cand = lshCandidates(sigs, bands = 4, rowsPerBand = 1)
-      val a = sigs.select($"doc_id".as("id_a"), $"sh".as("sh_a"),
-        $"m0".as("a0"), $"m1".as("a1"), $"m2".as("a2"), $"m3".as("a3"))
-      val b = sigs.select($"doc_id".as("id_b"), $"sh".as("sh_b"),
-        $"m0".as("b0"), $"m1".as("b1"), $"m2".as("b2"), $"m3".as("b3"))
-      cand.join(a, "id_a").join(b, "id_b")
-        .withColumn("matches", (0 until 4).map(i =>
-          when(col(s"a$i") === col(s"b$i"), 1L).otherwise(0L)).reduce(_ + _))
-        .withColumn("inter",
-          size(array_intersect($"sh_a", $"sh_b")).cast(LongType))
-        .withColumn("exact_ppm", expr(
-          "inter * 1000000L DIV (size(sh_a) + size(sh_b) - inter)"))
-        .groupBy($"matches")
-        .agg(count(lit(1)).as("n_pairs"),
-          expr("sum(exact_ppm) DIV count(1)").as("avg_exact_ppm"),
-          min($"exact_ppm").as("min_exact_ppm"),
-          max($"exact_ppm").as("max_exact_ppm"))
-        .select($"matches", ($"matches" * lit(250000L)).as("est_ppm"),
-          $"n_pairs", $"avg_exact_ppm", $"min_exact_ppm", $"max_exact_ppm")
-        .orderBy($"matches")
+  private[graft] def p71Body(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val raw = sigsDf(s, d, 4)
+    // Materialize the signature table once per call and read it back
+    // (the p08 comment's "checkpoint to parquet"); unlike a
+    // localCheckpoint, this hands the planner real size stats for the
+    // verify joins. Each call gets its own `call_n` dir, never
+    // overwritten: a frame from an earlier call keeps its resolved file
+    // listing valid (DeterminismSpec holds two calls side by side).
+    // Minting call_n deletes call_{n-2}, so at most two signature tables
+    // stay on disk. The pid base is wiped once per JVM (stale pid reuse)
+    // and deleted at exit.
+    val n = p71CallSeq.getAndIncrement()
+    if (n == 0L) Replay.scratch("p71_sigs")
+    else if (n >= 2L) Replay.delete(s"$p71PinBase/call_${n - 2}")
+    val dir = s"$p71PinBase/call_$n"
+    raw.write.mode("overwrite").parquet(dir)
+    // The schema just written: reading it back needs no inference job.
+    val sigs = s.read.schema(raw.schema).parquet(dir)
+    val cand = lshCandidates(sigs, bands = 4, rowsPerBand = 1)
+    val a = sigs.select($"doc_id".as("id_a"), $"sh".as("sh_a"),
+      $"m0".as("a0"), $"m1".as("a1"), $"m2".as("a2"), $"m3".as("a3"))
+    val b = sigs.select($"doc_id".as("id_b"), $"sh".as("sh_b"),
+      $"m0".as("b0"), $"m1".as("b1"), $"m2".as("b2"), $"m3".as("b3"))
+    cand.join(a, "id_a").join(b, "id_b")
+      .withColumn("matches", (0 until 4).map(i =>
+        when(col(s"a$i") === col(s"b$i"), 1L).otherwise(0L)).reduce(_ + _))
+      .withColumn("inter",
+        size(array_intersect($"sh_a", $"sh_b")).cast(LongType))
+      .withColumn("exact_ppm", expr(
+        "inter * 1000000L DIV (size(sh_a) + size(sh_b) - inter)"))
+      .groupBy($"matches")
+      .agg(count(lit(1)).as("n_pairs"),
+        expr("sum(exact_ppm) DIV count(1)").as("avg_exact_ppm"),
+        min($"exact_ppm").as("min_exact_ppm"),
+        max($"exact_ppm").as("max_exact_ppm"))
+      .select($"matches", ($"matches" * lit(250000L)).as("est_ppm"),
+        $"n_pairs", $"avg_exact_ppm", $"min_exact_ppm", $"max_exact_ppm")
+      .orderBy($"matches")
   }
-
-  /** Probe surfaces for p71shape: the sigs scan alone and the candidate
-    * half alone (both through the noop sink). */
-  private[graft] def p71SigsProbe(s: SparkSession, d: String): DataFrame =
-    sigsDf(s, d, 4)
-  private[graft] def p71CandProbe(s: SparkSession, d: String): DataFrame =
-    lshCandidates(sigsDf(s, d, 4), bands = 4, rowsPerBand = 1)
 
   private val p71 = Q(
     "p71_minhash_calibration",
-    // parquetPin (r15): the shingle+minhash expression is the entry's
+    // The parquet pin (r15): the shingle+minhash expression is the entry's
     // heaviest per-row work and the un-pinned plan derived it FOUR times
     // (both band self-join sides + the two verify-join broadcast builds,
     // two of those feeding driver-side broadcast collection — the
@@ -4648,7 +4532,7 @@ object Pipeline {
     // planner real size stats for the verify joins. Probed at sf0.1 AND
     // sf1 against no-pin and localCheckpoint (OPTIMIZATION_r15.md):
     // equal-or-faster at both scales.
-    (s, d) => p71Body(s, d, pinSigs = false, parquetPin = true),
+    (s, d) => p71Body(s, d),
     Some(s"""
       WITH $candCtesDuck,
       j AS (

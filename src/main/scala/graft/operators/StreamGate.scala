@@ -1,11 +1,10 @@
 package graft.operators
 
 import graft.Q
-import graft.streaming.{Nexmark, ReplayConfs, StatefulProcessors}
+import graft.streaming.{Nexmark, Replay, ReplayConfs, StatefulProcessors}
 import graft.streaming.ReplayConfs.withConfs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Hard-gate entries whose SPARK SIDE executes through
@@ -118,97 +117,24 @@ object StreamGate {
       java.nio.file.Paths.get(in, f"chunk$i%03d.parquet")): Unit
   }
 
-  private val liveDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val hookArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  /** The scratch dir of stw replay `tag` (Replay.scratch), wiped now. */
+  private[graft] def base(tag: String): String = Replay.scratch(s"stw_$tag")
 
-  private def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
-    f.delete(): Unit
-  }
-
-  /** Drain `chunks` through `transform` one AvailableNow run at a time,
-    * sharing a checkpoint, into a parquet sink; return the sink re-read
-    * (localCheckpoint'd so the frame survives a later call's wipe).
-    * Dirs are pid-suffixed (concurrent JVMs can't wipe each other) and
-    * wiped per call (a stale checkpoint can never serve a previous code
-    * version's output).
+  /** Drain `chunks` through `transform` (Replay.drain), one AvailableNow
+    * run per chunk: the chunks are staged first, because the state
+    * partition count is read from the staged bytes, and each run promotes
+    * its chunk into the source dir before it starts.
     */
   private def replay(s: SparkSession, tag: String, chunks: Seq[DataFrame],
       transform: DataFrame => DataFrame): DataFrame = {
-    val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stw_${tag}_${ProcessHandle.current().pid()}")
-      .toAbsolutePath.toString
-    rmrf(new java.io.File(base))
-    liveDirs.add(base)
-    if (hookArmed.compareAndSet(false, true))
-      sys.addShutdownHook(
-        liveDirs.forEach(d => rmrf(new java.io.File(d)))): Unit
-    val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
-    // SPARK_GRAFT_INJECT_STW=1 runs the WHOLE gate under mid-batch
-    // task-failure injection (graft.streaming.FailureInjection): partition
-    // 0 of every stateful stage dies on its first attempt after partial
-    // state writes and must be retried bit-identically — the hash gate
-    // then doubles as the exactly-once-under-task-retry proof (requires
-    // the session master to allow retries, e.g. local[N,2]).
-    val injectAcc =
-      if (sys.env.get("SPARK_GRAFT_INJECT_STW").contains("1"))
-        Some(s.sparkContext.longAccumulator(s"graft_inject_$tag"))
-      else None
-    val tf: DataFrame => DataFrame = df => injectAcc match {
-      case Some(a) =>
-        graft.streaming.FailureInjection.failFirstAttempt(transform(df), a)
-      case None => transform(df)
-    }
-    val schema = chunks.head.schema
-    val trace = sys.env.get("SPARK_GRAFT_STW_TRACE").contains("1")
-    val stage = s"$base/stage"
-    val tS = System.nanoTime()
+    val dir = base(tag)
+    val (in, stage, schema) = (s"$dir/in", s"$dir/stage", chunks.head.schema)
     stageChunks(s, stage, chunks)
-    // Size the stateful shuffle from the exact staged byte count.
-    val parts = statePartitions(s, dirBytes(s, stage))
-    if (trace) System.err.println(
-      f"[stw-trace] $tag stage=${(System.nanoTime() - tS) / 1e9}%.2f s")
-    withConfs(s, ReplayConfs.replay(parts): _*) {
-      val outSchema = chunks.indices.map { i =>
-        val t0 = System.nanoTime()
+    Replay.drain(s, dir, tag, statePartitions(s, dirBytes(s, stage)),
+      chunks.indices.map(i => () => {
         promoteChunk(s, stage, in, i, schema)
-        val t1 = System.nanoTime()
-        val sunk = tf(s.readStream.schema(schema).parquet(in))
-        val q = sunk
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        require(q.awaitTermination(180000),
-          s"stw replay '$tag' did not drain a chunk in 180s")
-        if (trace) {
-          System.err.println(
-            f"[stw-trace] $tag run$i write=${(t1 - t0) / 1e9}%.2f s " +
-            f"drain=${(System.nanoTime() - t1) / 1e9}%.2f s")
-          q.recentProgress.foreach { p =>
-            val st = p.stateOperators.map { o =>
-              val cm = o.customMetrics
-              def c(k: String) =
-                Option(cm.get(k)).map(_.longValue()).getOrElse(-1L)
-              s"stateRows=${o.numRowsTotal} shufflePartitions=" +
-                s"${o.numShufflePartitions} updMs=${o.allUpdatesTimeMs} " +
-                s"commitMs=${o.commitTimeMs} " +
-                s"ckptLat=${c("rocksdbCommitCheckpointLatency")} " +
-                s"fileSync=${c("rocksdbCommitFileSyncLatencyMs")} " +
-                s"flushLat=${c("rocksdbCommitFlushLatency")}"
-            }.mkString("; ")
-            System.err.println(s"[stw-trace]   batch=${p.batchId} " +
-              s"rows=${p.numInputRows} durations=${p.durationMs} $st")
-          }
-        }
-        sunk.schema
-      }.last
-      injectAcc.foreach(a => System.err.println(
-        s"[stw] '$tag' injected-failure retries survived: ${a.value}"))
-      // The sink's schema is the query's: reading it back needs no
-      // inference job.
-      s.read.schema(outSchema).parquet(out).localCheckpoint()
-    }
+        s.readStream.schema(schema).parquet(in)
+      }), transform)
   }
 
   private val B = "read_parquet('{NX}/bids/*.parquet')"
@@ -624,56 +550,38 @@ object StreamGate {
         .withColumn("s3", col("b3") * (lit(1) - col("s2")))
         .agg(sum((col("s0") + col("s1") + col("s2") + col("s3"))
           .cast("long"))).first().getLong(0)
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_stw_q12gap_${ProcessHandle.current().pid()}")
-        .toAbsolutePath.toString
-      rmrf(new java.io.File(base))
-      liveDirs.add(base)
-      if (hookArmed.compareAndSet(false, true))
-        sys.addShutdownHook(
-          liveDirs.forEach(d => rmrf(new java.io.File(d)))): Unit
-      val (in, ckpt) = (s"$base/in", s"$base/ckpt")
+      val dir = base("q12gap")
+      val (in, ckpt) = (s"$dir/in", s"$dir/ckpt")
       val schema = chunks.head.schema
       // Single-pass chunk staging + per-step promote, same as replay.
-      val stageDir = s"$base/stage"
+      val stageDir = s"$dir/stage"
       stageChunks(s, stageDir, chunks)
       promoteChunk(s, stageDir, in, 0, schema)
       // Same input-volume state-partition sizing as replay (see
       // statePartitions): set before the manual-clock query starts.
       val parts = statePartitions(s, dirBytes(s, stageDir) + dirBytes(s, in))
       val out = withConfs(s, ReplayConfs.replay(parts): _*) {
-        val clock = new org.apache.spark.sql.graft.shims.GraftManualClock(t0)
-        // SPARK_GRAFT_INJECT_STW=1 injects here too (same contract as
-        // replay): the manual-clock path otherwise escapes the gate-wide
-        // task-failure wrapper.
-        val injectAcc =
-          if (sys.env.get("SPARK_GRAFT_INJECT_STW").contains("1"))
-            Some(s.sparkContext.longAccumulator("graft_inject_q12gap"))
-          else None
-        val gapDf = StatefulProcessors.gapWindowsTws(
-          s.readStream.schema(schema).parquet(in), sizeMs).toDF()
-        val injected = injectAcc match {
-          case Some(a) =>
-            graft.streaming.FailureInjection.failFirstAttempt(gapDf, a)
-          case None => gapDf
+        Replay.injecting(s, "q12gap") { inject =>
+          val clock = new org.apache.spark.sql.graft.shims.GraftManualClock(t0)
+          val (q, rows) =
+            org.apache.spark.sql.graft.shims.startWithManualClock(
+              inject(StatefulProcessors.gapWindowsTws(
+                s.readStream.schema(schema).parquet(in), sizeMs).toDF()),
+              ckpt, clock, stepMs,
+              org.apache.spark.sql.streaming.OutputMode.Append())
+          try {
+            awaitBatch(q, 0)
+            chunks.tail.zipWithIndex.foreach { case (_, i) =>
+              promoteChunk(s, stageDir, in, i + 1, schema)
+              clock.advance(stepMs)
+              awaitBatch(q, i + 1)
+            }
+            clock.advance(sizeMs + 2 * stepMs) // one far batch: fire the rest
+            awaitRows(rows, nExpected)
+          } finally q.stop()
+          rows().map(r => (r.getInt(0), ((r.getLong(1) - t0) / stepMs).toInt,
+            r.getLong(2) - r.getLong(1), r.getLong(3)))
         }
-        val (q, rows) = org.apache.spark.sql.graft.shims.startWithManualClock(
-          injected, ckpt, clock, stepMs,
-          org.apache.spark.sql.streaming.OutputMode.Append())
-        try {
-          awaitBatch(q, 0)
-          chunks.tail.zipWithIndex.foreach { case (_, i) =>
-            promoteChunk(s, stageDir, in, i + 1, schema)
-            clock.advance(stepMs)
-            awaitBatch(q, i + 1)
-          }
-          clock.advance(sizeMs + 2 * stepMs) // one far batch: fire the rest
-          awaitRows(rows, nExpected)
-        } finally q.stop()
-        injectAcc.foreach(a => System.err.println(
-          s"[stw] 'q12gap' injected-failure retries survived: ${a.value}"))
-        rows().map(r => (r.getInt(0), ((r.getLong(1) - t0) / stepMs).toInt,
-          r.getLong(2) - r.getLong(1), r.getLong(3)))
       }
       out.toDF("bidder", "win_batch", "win_len_ms", "n_bids")
         .orderBy(col("bidder"), col("win_batch"))

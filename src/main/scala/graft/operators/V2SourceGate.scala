@@ -2,11 +2,9 @@ package graft.operators
 
 import graft.Q
 import graft.sources.NexmarkV2
-import graft.streaming.{Nexmark, ReplayConfs, StatefulProcessors}
-import graft.streaming.ReplayConfs.withConfs
+import graft.streaming.{Nexmark, Replay, StatefulProcessors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Hard-gate entries whose SOURCE is the native DataSource V2 generator
   * (graft.sources.NexmarkV2) — offset-range tracking, per-trigger
@@ -28,72 +26,30 @@ import org.apache.spark.sql.streaming.Trigger
   * chunk predicates.
   */
 object V2SourceGate {
-  private val liveDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val hookArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
-    f.delete(): Unit
-  }
-
   /** One (totalEvents, rowsPerTrigger) segment = one AvailableNow run. */
   private final case class Seg(totalEvents: Long, rowsPerTrigger: Long)
 
-  /** Drain the V2 id stream through `transform` across `segments` (shared
-    * checkpoint, RocksDB state store, parquet sink); return the sink
-    * re-read. SPARK_GRAFT_INJECT_STW=1 wraps the transform in mid-batch
-    * task-failure injection exactly like StreamGate.replay.
+  /** The scratch dir of V2 replay `tag` (Replay.scratch), wiped now; apart
+    * from StreamGate's, whose tags overlap these.
+    */
+  private[graft] def base(tag: String): String = Replay.scratch(s"v2gate_$tag")
+
+  /** Drain the V2 id stream through `transform` (Replay.drain), one
+    * AvailableNow run per segment.
     */
   private def replayV2(s: SparkSession, tag: String, segments: Seq[Seg],
       transform: DataFrame => DataFrame): DataFrame = {
     require(segments.map(_.totalEvents) == segments.map(_.totalEvents).sorted,
       "segments must raise totalEvents monotonically")
-    val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_v2gate_${tag}_${ProcessHandle.current().pid()}")
-      .toAbsolutePath.toString
-    rmrf(new java.io.File(base))
-    liveDirs.add(base)
-    if (hookArmed.compareAndSet(false, true))
-      sys.addShutdownHook(
-        liveDirs.forEach(d => rmrf(new java.io.File(d)))): Unit
-    val (out, ckpt) = (s"$base/out", s"$base/ckpt")
-    val injectAcc =
-      if (sys.env.get("SPARK_GRAFT_INJECT_STW").contains("1"))
-        Some(s.sparkContext.longAccumulator(s"graft_inject_v2_$tag"))
-      else None
-    val tf: DataFrame => DataFrame = df => injectAcc match {
-      case Some(a) =>
-        graft.streaming.FailureInjection.failFirstAttempt(transform(df), a)
-      case None => transform(df)
-    }
     // Input-volume state-partition sizing (StreamGate.statePartitions):
     // the V2 id range is known exactly up front, so the input is
     // estimated as segments.last.totalEvents ids × ~32 B of projected
     // event row (3.2 MB, one partition, at the catalog's 100k events).
-    val parts = StreamGate.statePartitions(s, segments.last.totalEvents * 32L)
-    withConfs(s, ReplayConfs.replay(parts): _*) {
-      val trace = sys.env.get("SPARK_GRAFT_STW_TRACE").contains("1")
-      val outSchema = segments.zipWithIndex.map { case (seg, i) =>
-        val t0 = System.nanoTime()
-        val ids = NexmarkV2.ids(s, seg.totalEvents,
-          rowsPerTrigger = Some(seg.rowsPerTrigger), numPartitions = 4)
-        val sunk = tf(ids)
-        val q = sunk.writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        require(q.awaitTermination(180000),
-          s"v2 replay '$tag' did not drain a segment in 180s")
-        if (trace) System.err.println(
-          f"[stw-trace] v2_$tag run$i drain=${(System.nanoTime() - t0) / 1e9}%.2f s")
-        sunk.schema
-      }.last
-      injectAcc.foreach(a => System.err.println(
-        s"[stw] 'v2_$tag' injected-failure retries survived: ${a.value}"))
-      // The sink's schema is the query's: reading it back needs no
-      // inference job.
-      s.read.schema(outSchema).parquet(out).localCheckpoint()
-    }
+    Replay.drain(s, base(tag), s"v2_$tag",
+      StreamGate.statePartitions(s, segments.last.totalEvents * 32L),
+      segments.map(seg => () => NexmarkV2.ids(s, seg.totalEvents,
+        rowsPerTrigger = Some(seg.rowsPerTrigger), numPartitions = 4)),
+      transform)
   }
 
   private val B = "read_parquet('{NX}/bids/*.parquet')"

@@ -505,18 +505,6 @@ object StreamFuzz {
 
   // ---- replay machinery (the StreamGate pattern + random restarts) ----
 
-  private def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
-    f.delete(): Unit
-  }
-
-  private def baseDir(tag: String): String = {
-    val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_streamfuzz_${tag}_${ProcessHandle.current().pid()}")
-      .toAbsolutePath.toString
-    rmrf(new java.io.File(p)); p
-  }
-
   /** Land one chunk as one file `in/cNNNN.parquet` with a strictly
     * increasing modification time — both the path order and the modTime
     * order the file source could use agree with chunk order, so each file
@@ -530,7 +518,7 @@ object StreamFuzz {
     val dst = new java.io.File(in, f"c$idx%04d.parquet")
     java.nio.file.Files.move(part.toPath, dst.toPath)
     dst.setLastModified(1700000000000L + idx * 60000L): Unit
-    rmrf(new java.io.File(stage))
+    Replay.delete(stage)
   }
 
   /** SPARK_GRAFT_INJECT_FUZZ=1 runs the whole fuzz corpus under mid-batch
@@ -568,7 +556,7 @@ object StreamFuzz {
   private def replay(s: SparkSession, tag: String, chunks: Seq[DataFrame],
       restarts: Seq[Boolean], transform: DataFrame => DataFrame,
       update: Boolean = false): DataFrame = {
-    val base = baseDir(tag)
+    val base = Replay.scratch(s"streamfuzz_$tag")
     val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
     new java.io.File(in).mkdirs()
     withConfs(s, RocksState, SharedClassLoader) {
@@ -613,7 +601,7 @@ object StreamFuzz {
          else s.createDataFrame(
            s.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema))
           .localCheckpoint()
-      rmrf(new java.io.File(base))
+      Replay.delete(base)
       result
     }
   }
@@ -829,7 +817,7 @@ object StreamFuzz {
     val segs = scn.chunks.head.map(_.asInstanceOf[V2Seg])
     val np = scn.params("numPartitions").toInt
     val groups = scn.params("groups")
-    val base = baseDir(s"v2s${scn.seed}")
+    val base = Replay.scratch(s"streamfuzz_v2s${scn.seed}")
     val (out, ckpt) = (s"$base/out", s"$base/ckpt")
     val result = withConfs(s, RocksState, SharedClassLoader) {
       var outSchema: org.apache.spark.sql.types.StructType = null
@@ -853,7 +841,7 @@ object StreamFuzz {
          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema))
         .localCheckpoint()
     }
-    rmrf(new java.io.File(base))
+    Replay.delete(base)
     result
   }
 
@@ -1109,7 +1097,7 @@ object StreamFuzz {
     val times = clockTimes(scn)
     val chunks = scn.chunks.map(bidDf(s, _).select(col("bidder")))
     val nExpected = gapWindowsTruth(s, scn).count()
-    val base = baseDir(s"gw${scn.seed}")
+    val base = Replay.scratch(s"streamfuzz_gw${scn.seed}")
     val (in, ckpt) = (s"$base/in", s"$base/ckpt")
     new java.io.File(in).mkdirs()
     val out = withConfs(s, RocksState, SharedClassLoader) {
@@ -1141,7 +1129,7 @@ object StreamFuzz {
         q.stop()
       }
     }
-    rmrf(new java.io.File(base))
+    Replay.delete(base)
     out.toDF("bidder", "startMs", "endMs", "nBids")
   }
 

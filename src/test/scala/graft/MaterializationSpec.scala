@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.file.Files
 
 import graft.operators.{Pipeline, StreamGate}
+import graft.streaming.ReplayConfs.withConfs
 import org.apache.commons.io.FileUtils
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -29,7 +30,7 @@ class MaterializationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("three p71 calls leave at most two call dirs, the last two alive") {
     val frames = (1 to 3).map(_ =>
-      Pipeline.p71Body(spark, sf, pinSigs = false, parquetPin = true))
+      Pipeline.p71Body(spark, sf))
     val dirs = callDirs()
     assert(dirs.size <= 2, s"p71 call dirs: $dirs")
     // DeterminismSpec holds two invocations side by side: both still read.
@@ -66,12 +67,9 @@ class MaterializationSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val stage = tmp("graft_stage")
     val c0 = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
-    val key = "spark.sql.files.maxRecordsPerFile"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "1")
+    withConfs(spark, "spark.sql.files.maxRecordsPerFile" -> "1") {
       StreamGate.stageChunks(spark, stage, Seq(c0))
-    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
     val in = tmp("graft_in")
     val e = intercept[IllegalArgumentException](
       StreamGate.promoteChunk(spark, stage, in, 0, c0.schema))

@@ -23,19 +23,22 @@ class ReplayConfsSpec extends AnyFunSuite {
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 
-  private def keepBest(): Unit = Catalog.queries("stw_keep_best")(spark, sf)
+  private def run(name: String): Unit = Catalog.queries(name)(spark, sf)
     .write.format("noop").mode("overwrite").save()
 
-  test("a second stw_keep_best call compiles no generated class") {
-    val before = confs
-    // The test session sets the shuffle partitions and leaves the state
-    // store provider and artifact isolation unset: both cases are covered.
-    assert(before.contains(None) && before.exists(_.isDefined))
-    compiles(keepBest())
-    assert(confs == before)
-    assert(compiles(keepBest()) == 0)
-    assert(confs == before)
-  }
+  // One entry per replay shape: file chunks (StreamGate) and the V2
+  // generator source (V2SourceGate), which runs at NexmarkBatch.N.
+  for (name <- Seq("stw_keep_best", "stw_v2_auction_topk"))
+    test(s"a second $name call compiles no generated class") {
+      val before = confs
+      // The test session sets the shuffle partitions and leaves the state
+      // store provider and artifact isolation unset: both cases are covered.
+      assert(before.contains(None) && before.exists(_.isDefined))
+      compiles(run(name))
+      assert(confs == before)
+      assert(compiles(run(name)) == 0)
+      assert(confs == before)
+    }
 
   test("withConfs sets every key in its body and restores them after a throw") {
     val before = confs

@@ -1,5 +1,7 @@
 package graft
 
+import graft.streaming.Replay
+import graft.streaming.ReplayConfs.withConfs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -13,11 +15,6 @@ class ScaleSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
   import spark.implicits._
 
-  private def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmrf)
-    f.delete()
-  }
-
   test("bucketed tables join without a shuffle exchange") {
     // warehouse.dir is a static conf — use the session default location,
     // and clear any orphaned table directories from prior runs (DROP TABLE
@@ -25,7 +22,7 @@ class ScaleSpec extends AnyFunSuite {
     Seq("b_orders", "b_lineitem").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
       val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) rmrf(loc)
+      if (loc.exists()) Replay.delete(loc)
     }
     Tables.load(spark, sf, "orders")
       .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
@@ -78,17 +75,11 @@ class ScaleSpec extends AnyFunSuite {
     // injects a bloom_filter_might_contain predicate into the fact scan,
     // cutting shuffle input before the join — the third pruning layer
     // after static pushdown and partition pruning.
-    val saved = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "1GB")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConfs(spark,
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "1GB",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = Tables.load(spark, sf, "lineitem")
       val ord = Tables.load(spark, sf, "orders")
         .filter($"o_orderpriority" === "1-URGENT")
@@ -97,11 +88,6 @@ class ScaleSpec extends AnyFunSuite {
       assert(plan.contains("might_contain"),
         s"no runtime bloom filter in plan:\n$plan")
       assert(joined.count() > 0)
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
     }
   }
 
@@ -237,7 +223,7 @@ class ScaleSpec extends AnyFunSuite {
         .select(operators.Pipeline.zInterleave16($"xi", $"yi").as("z"))
         .filter($"z" < 0)
       assert(negatives.isEmpty, "Int inputs produced negative Morton keys")
-    } finally rmrf(dir)
+    } finally Replay.delete(dir)
   }
 
   test("AQE coalesces undersized shuffle partitions at runtime") {
@@ -245,25 +231,15 @@ class ScaleSpec extends AnyFunSuite {
     // plan must read the shuffle through AQEShuffleRead with coalesced
     // partitions — the runtime half of shuffle sizing (static
     // spark.sql.shuffle.partitions is the other half).
-    val saved = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.shuffle.partitions")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
+    withConfs(spark, "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+        "spark.sql.shuffle.partitions" -> "32") {
       val agg = Tables.load(spark, sf, "events")
         .groupBy($"event_type").agg(count(lit(1)).as("n"))
       agg.collect()
       val finalPlan = agg.queryExecution.executedPlan.toString()
       assert(finalPlan.contains("AQEShuffleRead") && finalPlan.contains("coalesced"),
         s"no runtime partition coalescing in final adaptive plan:\n$finalPlan")
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
     }
   }
 
@@ -272,21 +248,12 @@ class ScaleSpec extends AnyFunSuite {
     // thresholds tuned to this data size, AQE must mark the sort-merge join
     // skew-handled and split the hot partition into multiple tasks — the
     // runtime half of the skew story (q30's salting is the static half).
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64KB")
+    withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB") {
       val skewed = spark.range(0, 220000)
         .select(when($"id" % 11 =!= 0, 0L).otherwise($"id" % 1000).as("k"),
           ($"id" * 7).as("payload"))
@@ -299,11 +266,6 @@ class ScaleSpec extends AnyFunSuite {
       val finalPlan = joined.queryExecution.executedPlan.toString()
       assert(finalPlan.contains("skew=true"),
         s"no skew-handled join in final adaptive plan:\n$finalPlan")
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{Nexmark, StreamQueries}
+import graft.streaming.{Nexmark, ReplayConfs, StreamQueries}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -254,11 +254,7 @@ class SinksSpec extends AnyFunSuite {
     // checkpoint: a fresh query on the same checkpoint must resume the
     // per-auction leaderboards (run-2 emissions fold chunk-1 bids) without
     // reprocessing chunk one (run 2 emits only for auctions chunk 2 touches).
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    ReplayConfs.withConfs(spark, ReplayConfs.RocksState) {
       val in = tmp("tws_in")
       val ckpt = tmp("tws_ckpt")
       val allBids = Nexmark.bids(spark, 4000).cache()
@@ -313,11 +309,6 @@ class SinksSpec extends AnyFunSuite {
       assert(lastLb.keySet == expect.keySet)
       for ((a, lb) <- expect)
         assert(lastLb(a) == lb, s"auction $a leaderboard diverges after restart")
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 

@@ -108,12 +108,6 @@ class V2ReadLimitSpec extends AnyFunSuite {
       val got = spark.read.parquet(s"$base/out")
       assert(got.distinct().count() == 1000)
       assert(got.agg(min("id"), max("id")).first().toSeq == Seq(0L, 999L))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(base))
-    }
+    } finally graft.streaming.Replay.delete(base)
   }
 }

@@ -15,32 +15,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * retry accumulator must show the failure actually fired — a zero there
   * would mean the proof silently proved nothing.
   *
-  * The same injection runs across the WHOLE 10-entry streaming hash gate
-  * via SPARK_GRAFT_INJECT_STW=1 (StreamGate.replay); this spec keeps a
-  * fast, always-on 3-topology pin inside the suite.
+  * The same injection runs across all 14 stw and stw_v2 hash-gate
+  * entries via SPARK_GRAFT_INJECT_STW=1 (Replay.injecting); this spec
+  * keeps a fast, always-on 3-topology pin inside the suite.
   */
 class FailureInjectionSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
-
-  private val Rocks = "org.apache.spark.sql.execution.streaming.state." +
-    "RocksDBStateStoreProvider"
-
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, Rocks)
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  private def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
-    f.delete(): Unit
-  }
 
   /** StreamGate-style replay: chunks drain one AvailableNow run each over
     * a shared checkpoint into a parquet sink; `inject` wraps the transform
@@ -48,11 +29,8 @@ class FailureInjectionSpec extends AnyFunSuite {
     */
   private def replay(tag: String, chunks: Seq[DataFrame],
       transform: DataFrame => DataFrame, inject: Boolean): (DataFrame, Long) =
-    withRocksDb {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_inj_${tag}_${ProcessHandle.current().pid()}")
-        .toAbsolutePath.toString
-      rmrf(new java.io.File(base))
+    ReplayConfs.withConfs(spark, ReplayConfs.RocksState) {
+      val base = Replay.scratch(s"inj_$tag")
       val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
       val acc = spark.sparkContext.longAccumulator(s"inj_$tag")
       val tf: DataFrame => DataFrame =
@@ -69,7 +47,7 @@ class FailureInjectionSpec extends AnyFunSuite {
         assert(q.awaitTermination(120000), s"replay '$tag' stuck")
       }
       val result = spark.read.parquet(out).localCheckpoint()
-      rmrf(new java.io.File(base))
+      Replay.delete(base)
       (result, acc.value)
     }
 

@@ -35,11 +35,6 @@ class SocketTransportSpec extends AnyFunSuite {
       col("b_date_time"))).as("j")).collect().map(_.getString(0)).toSeq
   }
 
-  private def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
-    f.delete(): Unit
-  }
-
   /** Serve `lines` (one connection, chunked with small gaps so the feed
     * spans several micro-batches), then hold the connection open until
     * `done` flips — the socket source treats a closed connection as a
@@ -100,7 +95,7 @@ class SocketTransportSpec extends AnyFunSuite {
     } finally {
       done.set(true)
       server.close()
-      rmrf(new java.io.File(base))
+      Replay.delete(base)
     }
   }
 
@@ -145,7 +140,7 @@ class SocketTransportSpec extends AnyFunSuite {
     } finally {
       done.set(true)
       server.close()
-      rmrf(new java.io.File(base))
+      Replay.delete(base)
     }
   }
 }

@@ -335,10 +335,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("session window (q11) runs on the RocksDB state store provider") {
     implicit val sqlCtx = spark.sqlContext
-    val saved = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    ReplayConfs.withConfs(spark, ReplayConfs.RocksState) {
       val ms = MemoryStream[BidCC]
       val rows = bidRows.take(5000)
       val maxTs = rows.map(_.b_date_time.getTime).max
@@ -351,11 +348,6 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       q.stop()
       assert(spark.table("rocks_sink").filter($"bidder" =!= -1).count() > 0)
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -422,17 +414,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   /** transformWithState requires the RocksDB state store provider. */
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withRocksDb[T](body: => T): T =
+    ReplayConfs.withConfs(spark, ReplayConfs.RocksState)(body)
 
   test("transformWithState leaderboard matches a batch top-k recompute") {
     withRocksDb {

@@ -20,11 +20,6 @@ class V2SourceSpec extends AnyFunSuite {
     d.toAbsolutePath.toString
   }
 
-  private def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
-    f.delete(): Unit
-  }
-
   /** Drain one AvailableNow run of `df` into a parquet sink; returns the
     * number of micro-batches the run executed.
     */
@@ -48,7 +43,7 @@ class V2SourceSpec extends AnyFunSuite {
       assert(got.count() == 1000)
       assert(got.distinct().count() == 1000, "duplicate ids — replay")
       assert(got.agg(min("id"), max("id")).first().toSeq == Seq(0L, 999L))
-    } finally rmrf(new java.io.File(base))
+    } finally Replay.delete(base)
   }
 
   test("checkpoint restart mid-offset-range: no gap, no replay") {
@@ -67,7 +62,7 @@ class V2SourceSpec extends AnyFunSuite {
       assert(got.count() == 1000, s"gap or loss: ${got.count()}")
       assert(got.distinct().count() == 1000, "duplicate ids — replay")
       assert(got.agg(sum("id")).first().getLong(0) == 999L * 1000 / 2)
-    } finally rmrf(new java.io.File(base))
+    } finally Replay.delete(base)
   }
 
   test("short format name resolves via DataSourceRegister") {
@@ -78,7 +73,7 @@ class V2SourceSpec extends AnyFunSuite {
       assert(df.schema.fieldNames.toSeq == Seq("id"))
       drain(df, s"$base/out", s"$base/ckpt")
       assert(spark.read.parquet(s"$base/out").count() == 100)
-    } finally rmrf(new java.io.File(base))
+    } finally Replay.delete(base)
   }
 
   test("v2 bid stream == batch bid projection over the same id range") {
@@ -91,7 +86,7 @@ class V2SourceSpec extends AnyFunSuite {
       val want = Nexmark.bidsFromIds(spark.range(0, 5000).toDF())
       assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
         "v2-sourced bids diverge from the batch projection")
-    } finally rmrf(new java.io.File(base))
+    } finally Replay.delete(base)
   }
 
   test("live-rate mode bounds availability by wall clock") {
@@ -110,7 +105,7 @@ class V2SourceSpec extends AnyFunSuite {
       val n = spark.read.parquet(s"$base/out").count()
       assert(n > 0, "rate mode produced nothing")
       assert(n <= 5000, s"rate mode overshot wall-clock availability: $n")
-    } finally rmrf(new java.io.File(base))
+    } finally Replay.delete(base)
   }
 
   test("bad options fail at load time") {
