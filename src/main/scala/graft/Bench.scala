@@ -50,6 +50,24 @@ object Bench {
   private[graft] def full(results: Seq[(String, Double)], failed: Seq[String]): String =
     (fields(results) :+ s""""failed":${names(failed)}""").mkString("{", ",", "}")
 
+  /** Environment calibration (r05: four entries read 8–20 s in the
+    * driver's run vs 0.6–2 s on identical code/data in-round, the second
+    * environmental whipsaw after r03's 100 s stalls). The probe is a
+    * FIXED pure-compute query — a 2M-row range aggregated through the
+    * noop sink, no IO, no catalog code — so its cost can only move with
+    * the measuring host. Returns its wall seconds. The first run in a JVM
+    * also compiles the query's generated classes, so callers discard it.
+    */
+  private[graft] def calibProbe(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0, 2000000, 1, 32)
+      // bit_xor: overflow-free under ANSI mode (a sum of 2M scaled ids
+      // exceeds Long.Max), still forces per-row multiply + full agg.
+      .selectExpr("bit_xor(id * 2654435761) as s", "count(1) as n")
+      .write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     // Optional args restrict the run to named queries (dev loop); the
     // driver always calls with no args.
@@ -87,24 +105,6 @@ object Bench {
     if (only.isEmpty || only.exists(_.startsWith("sql_")))
       Tables.registerAll(spark, sfDir)
 
-    // Environment calibration (r05: four entries read 8–20 s in the
-    // driver's run vs 0.6–2 s on identical code/data in-round, the second
-    // environmental whipsaw after r03's 100 s stalls). The probe is a
-    // FIXED pure-compute query — a 2M-row range aggregated through the
-    // noop sink, no IO, no catalog code — so its cost can only move with
-    // the measuring host. Run at start/middle/end and recorded in
-    // bench_full.json as _calib_{start,mid,end}: a healthy run reads
-    // ~0.1–0.3 s each; anything above ~1 s marks that WINDOW of the run
-    // as environment-inflated, de-noising per-entry deltas.
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 2000000, 1, 32)
-        // bit_xor: overflow-free under ANSI mode (a sum of 2M scaled ids
-        // exceeds Long.Max), still forces per-row multiply + full agg.
-        .selectExpr("bit_xor(id * 2654435761) as s", "count(1) as n")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
     val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
     def gcMs(): Long = {
       var t = 0L; gcBeans.forEach(b => t += math.max(0L, b.getCollectionTime)); t
@@ -130,12 +130,18 @@ object Bench {
 
     val catalog = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
-    val calibStart = calibrate()
+    // The calibration probe runs at start/middle/end, recorded in
+    // bench_full.json as _calib_{start,mid,end}: a healthy run reads
+    // ~0.1–0.3 s each; anything above ~1 s marks that WINDOW of the run
+    // as environment-inflated, de-noising per-entry deltas. The untimed
+    // first run takes the probe's codegen out of the start reading.
+    calibProbe(spark)
+    val calibStart = calibProbe(spark)
     val mid = catalog.size / 2
     var calibMid = 0.0
     val retries = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     val timed = catalog.zipWithIndex.map { case ((name, fn), i) =>
-      if (i == mid && catalog.size > 2) calibMid = calibrate()
+      if (i == mid && catalog.size > 2) calibMid = calibProbe(spark)
       def once(): (Double, Long, Boolean) = {
         val g0 = gcMs()
         val t0 = System.nanoTime()
@@ -190,7 +196,7 @@ object Bench {
     }
     val failed = timed.collect { case (name, None) => name }
     val ran = timed.collect { case (name, Some(sec)) => name -> sec }
-    val calibEnd = calibrate()
+    val calibEnd = calibProbe(spark)
     System.err.println(f"[bench] calibration start/mid/end: " +
       f"$calibStart%.3f / $calibMid%.3f / $calibEnd%.3f s " +
       f"(>~1 s ⇒ that window of THIS run is environment-inflated)")

@@ -89,12 +89,6 @@ object SoakRun {
           s"(samples retained): ${e.getMessage}")
     }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   private def buildQuery(spark: SparkSession, shape: String,
       eps: Int): DataFrame =
     buildShape(spark, shape, Nexmark.bidStream(spark, rowsPerSecond = eps))
@@ -237,7 +231,7 @@ object SoakRun {
     Thread.sleep(secs * 1000L)
     val progress = q.recentProgress.toSeq
     stopQuietly(q)
-    deleteRecursively(new java.io.File(ckpt))
+    Replay.delete(ckpt)
     case class Sample(batchMs: Long, inRows: Long, stateRows: Long,
         stateMemBytes: Long)
     val samples = progress.flatMap { p =>
@@ -317,7 +311,7 @@ object SoakRun {
     } finally {
       spark.streams.removeListener(listener)
       // 10-min RocksDB soaks leave multi-GB checkpoints behind.
-      deleteRecursively(new java.io.File(ckpt))
+      Replay.delete(ckpt)
     }
     val samples = buf.synchronized(buf.toSeq)
     require(samples.nonEmpty, "no progress samples — soak too short")
@@ -426,7 +420,7 @@ object SoakRun {
       queries.foreach(stopQuietly)
     } finally {
       spark.streams.removeListener(listener)
-      deleteRecursively(new java.io.File(base))
+      Replay.delete(base)
     }
     def mean(xs: Seq[Long]): Double =
       if (xs.isEmpty) 0 else xs.sum.toDouble / xs.size
@@ -477,28 +471,16 @@ object SoakRun {
       perQuery.mkString(","))
   }
 
-  /** Bench.scala's fixed pure-compute calibration probe (2M-row range →
-    * bit_xor through the noop sink): its cost moves only with the
-    * measuring host, so rate ceilings quoted alongside it become
-    * host-comparable across rounds (r11 verdict #6).
-    */
-  private def calibProbe(spark: SparkSession): Double = {
-    val t0 = System.nanoTime()
-    spark.range(0, 2000000, 1, 32)
-      .selectExpr("bit_xor(id * 2654435761) as s", "count(1) as n")
-      .write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** calibProbe with JIT warmup: the first executions on a cold session
-    * measure class loading + codegen compilation, not the host (observed
-    * 3.1 s cold vs 0.075 s warm on one box — 40x). Two discarded warmup
-    * runs, then the median of three. This is the only calibration form
-    * comparable to Bench's mid-run `_calib_mid` (always warm).
+  /** Bench.calibProbe with JIT warmup: rate ceilings quoted alongside it
+    * become host-comparable across rounds (r11 verdict #6). The first
+    * executions on a cold session measure class loading + codegen
+    * compilation, not the host (observed 3.1 s cold vs 0.075 s warm on
+    * one box — 40x). Two discarded warmup runs, then the median of three,
+    * comparable to Bench's `_calib_*` readings (warmed the same way).
     */
   private def warmCalibProbe(spark: SparkSession): Double = {
-    calibProbe(spark); calibProbe(spark)
-    val xs = (1 to 3).map(_ => calibProbe(spark)).sorted
+    graft.Bench.calibProbe(spark); graft.Bench.calibProbe(spark)
+    val xs = (1 to 3).map(_ => graft.Bench.calibProbe(spark)).sorted
     xs(1)
   }
 
@@ -612,7 +594,7 @@ object SoakRun {
       stopQuietly(q)
     } finally {
       spark.streams.removeListener(listener)
-      deleteRecursively(new java.io.File(base))
+      Replay.delete(base)
     }
     val samples = buf.synchronized(buf.toSeq)
     require(samples.nonEmpty, "no progress samples — soak too short")

@@ -115,16 +115,7 @@ object StoreProfile {
         s""""upd_ms":${tot("allUpdatesTimeMs")},"rm_ms":${tot("allRemovalsTimeMs")},""" +
         s""""commit_ms":${tot("commitTimeMs")}}""")
     }
-    SoakRunCleanup.deleteRecursively(new java.io.File(ckpt))
+    Replay.delete(ckpt)
     spark.stop()
-  }
-}
-
-/** Shared checkpoint cleanup (mirrors SoakRun's private helper). */
-private[streaming] object SoakRunCleanup {
-  def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
   }
 }

@@ -813,34 +813,31 @@ object StreamFuzz {
       timestamp_micros(col("id") * 1000L +
         pmod(xxhash64(col("id"), lit("v2ts")), lit(500L))).as("ts"))
 
-  private def v2SourceStream(s: SparkSession, scn: Scn): DataFrame = {
-    val segs = scn.chunks.head.map(_.asInstanceOf[V2Seg])
+  /** One Replay.drain run per V2 segment, at the session's own shuffle
+    * partition count (so the replay confs change nothing else), with each
+    * run's injected-failure retries folded into the sweep ledger even when
+    * a run fails.
+    */
+  private[graft] def v2SourceStream(s: SparkSession, scn: Scn): DataFrame = {
     val np = scn.params("numPartitions").toInt
     val groups = scn.params("groups")
     val base = Replay.scratch(s"streamfuzz_v2s${scn.seed}")
-    val (out, ckpt) = (s"$base/out", s"$base/ckpt")
-    val result = withConfs(s, RocksState, SharedClassLoader) {
-      var outSchema: org.apache.spark.sql.types.StructType = null
-      segs.foreach { seg =>
-        val ids = graft.sources.NexmarkV2.ids(s, seg.endOffset,
-          rowsPerTrigger = Some(seg.rowsPerTrigger), numPartitions = np)
-        val (transformed, foldRetries) = maybeInject(s)(
-          StatefulProcessors.gapSpectrum(
-            v2EventProjection(ids, groups)).toDF())
-        outSchema = transformed.schema
-        val q = transformed.writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        try require(q.awaitTermination(180000),
-          s"v2source seed ${scn.seed} did not drain a segment in 180s")
-        finally foldRetries()
-      }
-      (if (new java.io.File(out).exists())
-         s.read.schema(outSchema).parquet(out)
-       else s.createDataFrame(
-         s.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema))
-        .localCheckpoint()
-    }
+    val folds = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    val result =
+      try Replay.drain(s, base, s"v2source seed ${scn.seed}",
+        s.conf.get("spark.sql.shuffle.partitions").toInt,
+        scn.chunks.head.map { case seg: V2Seg => () =>
+          graft.sources.NexmarkV2.ids(s, seg.endOffset,
+            rowsPerTrigger = Some(seg.rowsPerTrigger), numPartitions = np)
+        },
+        ids => {
+          val (transformed, foldRetries) = maybeInject(s)(
+            StatefulProcessors.gapSpectrum(
+              v2EventProjection(ids, groups)).toDF())
+          folds += foldRetries
+          transformed
+        })
+      finally folds.foreach(_())
     Replay.delete(base)
     result
   }

@@ -83,6 +83,15 @@ class StreamFuzzSpec extends AnyFunSuite {
     }
   }
 
+  test("a v2source replay that emits no row reads back an empty frame") {
+    // One event leaves no gap to emit. The parquet sink creates its dir on
+    // the first run, so the read-back needs no missing-dir fallback.
+    val scn = StreamFuzz.Scn(0, "v2source",
+      Map("total" -> 1L, "numPartitions" -> 1L, "groups" -> 1L),
+      Seq(Seq(StreamFuzz.V2Seg(1L, 1L))), Seq(true))
+    assert(StreamFuzz.v2SourceStream(spark, scn).isEmpty)
+  }
+
   test("injection axis: seeds stay green under mid-batch task failures") {
     // graft.inject.fuzz=1 wraps every replayed stream in
     // FailureInjection.failFirstAttempt (partition 0's first attempt dies
