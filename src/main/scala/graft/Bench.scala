@@ -75,18 +75,11 @@ object Bench {
     val only = args.toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = Session.local("graft-bench", s"local[$cpus]", cpus.toInt,
+      "spark.sql.adaptive.enabled" -> "true",
       // Same rationale as Verify: DISK_ONLY pins of the iterative ops
       // are stored raw without this and exhaust local disk at probe SFs.
-      .config("spark.rdd.compress", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.rdd.compress" -> "true")
     // Same optimizer surface as Verify: the custom top-k rewrite is part
     // of the measured engine, not a test-only toy.
     graft.plans.TopK.installRewrite(spark)
@@ -199,7 +192,7 @@ object Bench {
     val calibEnd = calibProbe(spark)
     System.err.println(f"[bench] calibration start/mid/end: " +
       f"$calibStart%.3f / $calibMid%.3f / $calibEnd%.3f s " +
-      f"(>~1 s ⇒ that window of THIS run is environment-inflated)")
+      f"(>~1 s => that window of THIS run is environment-inflated)")
     // Host-inflation factor (r7 verdict #4): mean ratio of this run's
     // calibration probes to their committed floors. The probes are pure
     // compute on fixed data, so the ratio isolates the measuring host —

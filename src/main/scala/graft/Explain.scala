@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-hygiene audit: prints the formatted physical plan for the named
   * catalog queries (all of them with no args) plus a one-line summary of
   * scan pushdown, broadcast vs shuffle joins, and exchange count — the
@@ -20,21 +18,14 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Catalog.byName.keys.toSeq.sorted
     val aqe = sys.env.get("GRAFT_EXPLAIN_AQE").contains("1")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = Session.local("graft-explain", "local[4]", 32,
       // AQE off by default HERE only: under AdaptiveSparkPlan the printed
       // plan is the pre-execution skeleton — codegen collapse happens
       // per-stage at runtime, so WholeStageCodegen spans (and final join
       // picks) are invisible. The static audit wants the static plan;
       // GRAFT_EXPLAIN_AQE=1 executes and reads the final adaptive plan
       // instead (Bench always runs AQE on).
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.adaptive.enabled" -> aqe.toString)
 
     val verbose = sys.env.get("GRAFT_EXPLAIN_FULL").contains("1")
     for (n <- names; q <- Catalog.byName.get(n)) {

@@ -85,15 +85,8 @@ object Fsql {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val maxRows = args.lift(1).map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder()
-      .master("local[*]")
-      .appName("graft-fsql")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("graft-fsql", "local[*]", 32,
+      "spark.sql.adaptive.enabled" -> "true")
     plans.TopK.installRewrite(spark)
     registerViews(spark, sfDir)
     println(s"graft fsql - tables from $sfDir + NEXMark/YSB generators;")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-tool main: scale TESTDATA up by integer replication with
@@ -29,15 +29,8 @@ object GenScale {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/root/repo/target/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-genscale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-genscale", "local[32]", 32,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
 
     def replicate(df: DataFrame, keyCols: Seq[String]): DataFrame = {
       // Guard the stride contract: replica r adds r·Stride to every key,

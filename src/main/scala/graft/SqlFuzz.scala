@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.Random
 
@@ -1149,14 +1148,8 @@ object SqlFuzz {
     val n = if (args.length > 2) args(2).toInt else DefaultSeeds
     val first = if (args.length > 3) args(3).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-sqlfuzz", s"local[$cpus]", cpus.toInt,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     // Fuzz WITH the custom rewrite rule installed: every differential
     // pass then also proves TopKRewrite can't misfire on arbitrary SQL.
     graft.plans.TopK.installRewrite(spark)

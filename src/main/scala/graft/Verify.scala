@@ -73,26 +73,21 @@ object Verify {
     Catalog.requireKnown(args.drop(2).toSeq)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = Session.local("graft-verify",
       // local[N,2]: one task retry, the production-faithful setting (a
       // real cluster runs maxFailures=4; local mode's 1 is the outlier).
       // Deterministic failures still fail — a retry re-hits them — and it
       // lets SPARK_GRAFT_INJECT_STW=1 run the whole gate under mid-batch
       // task-failure injection (graft.streaming.Replay.injecting).
-      .master(s"local[$cpus,2]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+      s"local[$cpus,2]", cpus.toInt,
       // int96 would reach DuckDB as ns; micros keeps epoch_us == unix_micros.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
       // Compress persisted RDD blocks (lz4): the iterative ops pin
       // multi-GB integer frames at DISK_ONLY, which Spark stores RAW by
       // default — at sf100 p42's uncompressed pins alone (~31 GB) blew
       // local disk; lz4 cuts them 3-4x for a decode cost far below the
       // IO saved. Cluster equivalent: compressed checkpoint storage.
-      .config("spark.rdd.compress", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.rdd.compress" -> "true")
     // Run the gate WITH the custom optimizer rule active: every oracle
     // compare then doubles as proof that TopKRewrite never changes a
     // result anywhere in the catalog (a misfire would hash-fail here).

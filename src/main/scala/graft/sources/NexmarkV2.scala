@@ -284,7 +284,7 @@ private[sources] class NexmarkMicroBatchStream(opts: NexmarkV2.Opts)
   override def reportLatestOffset(): Offset = NexmarkOffset(available())
 
   // Becomes SourceProgress.description — the stable prefix is what
-  // ProgressLog keys on to know latestOffset/endOffset are ROW counts
+  // LiveRun.Sampler keys on to know latestOffset/endOffset are ROW counts
   // (id offsets) rather than e.g. the rate source's seconds.
   override def toString: String =
     s"${NexmarkV2.Format}[totalEvents=${opts.totalEvents}]"

@@ -30,15 +30,14 @@ import org.apache.spark.sql.streaming.Trigger
   * processing-time gap; ranking queries (q5/q6) replay per micro-batch via
   * foreachBatch exactly like the reference's per-window batches.
   */
-object NexmarkRun {
-  def main(args: Array[String]): Unit = {
-    // Strict flag/value pairing: a dangling flag or a value where a flag
-    // belongs aborts the run instead of silently mis-attributing knobs.
-    val opts = args.grouped(2).map {
-      case Array(k, v) if k.startsWith("-") && !v.startsWith("-") => k -> v
-      case other => sys.error(
-        s"bad argument pair '${other.mkString(" ")}' — expected -flag value")
-    }.toMap
+object NexmarkRun extends LiveRun.Cli("-q", "-s", "-e", "-g",
+    "--person-proportion", "--auction-proportion", "--bid-proportion",
+    "--capacity-eps", "--progress") {
+
+  def session(opts: Map[String, String]): SparkSession =
+    graft.Session.local(s"nexmark-q${opts.getOrElse("-q", "1")}", "local[8]", 8)
+
+  def run(spark: SparkSession, opts: Map[String, String]): Seq[String] = {
     val qn = opts.getOrElse("-q", "1").toInt
     val secs = opts.getOrElse("-s", "10").toInt
     val eps = opts.getOrElse("-e", "1000").toInt
@@ -52,23 +51,11 @@ object NexmarkRun {
       bidProportion = opts.getOrElse("--bid-proportion", "46").toInt,
       generators = opts.getOrElse("-g", "8").toInt)
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName(s"nexmark-q$qn")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     // --capacity-eps: bounded per-trigger admission through the V2
     // generator source (offsets available at the offered -e rate; each
     // trigger admits at most the capacity's worth — overload becomes
     // source backlog). 0/absent = the historical unbounded rate source.
     val capacityEps = opts.getOrElse("--capacity-eps", "0").toLong
-    val progressLog =
-      if (opts.get("--progress").contains("1")) Some(new ProgressLog(spark))
-      else None
     val bids =
       if (capacityEps > 0)
         graft.sources.NexmarkV2.bidStream(spark,
@@ -82,72 +69,60 @@ object NexmarkRun {
     val nStatic = (eps.toLong * secs * 4).max(50000L)
     val auctions = Nexmark.auctions(spark, nStatic, cfg = cfg)
     val persons = Nexmark.persons(spark, nStatic, cfg = cfg)
+    val name = s"nx_run_q$qn"
 
-    val t0 = System.nanoTime()
-    var rows = 0L
-    val sinkName = s"nx_run_q$qn"
-
-    def run(df: DataFrame, mode: String): Unit = {
-      val q = df.writeStream.format("memory").queryName(sinkName)
-        .outputMode(mode).trigger(Trigger.ProcessingTime("1 second")).start()
-      Thread.sleep(secs * 1000L)
-      q.stop()
-      rows = spark.table(sinkName).count()
-    }
-
-    qn match {
-      case 0 => run(StreamQueries.q0(bids), "append")
-      case 1 => run(StreamQueries.q1(bids), "append")
-      case 2 => run(StreamQueries.q2(bids), "append")
-      case 3 =>
-        // stream–static variant (stream–stream needs a second live source)
-        run(StreamQueries.q3(auctions, persons), "append")
-      case 4 => run(StreamQueries.q4(bids, auctions), "complete")
-      case 5 =>
-        // q5 ranking needs per-batch replay (foreachBatch, as the
-        // reference replays each hopping window).
+    LiveRun.sampling(spark) { sampler =>
+      val t0 = System.nanoTime()
+      def sink(df: DataFrame, mode: String): Long = {
+        val q = df.writeStream.format("memory").queryName(name)
+          .outputMode(mode).trigger(Trigger.ProcessingTime("1 second")).start()
+        Thread.sleep(secs * 1000L)
+        sampler.stop(q)
+        spark.table(name).count()
+      }
+      // Ranking and stream–static range queries replay per micro-batch
+      // (foreachBatch), as the reference replays each window.
+      def perBatch(f: DataFrame => DataFrame): Long = {
         val counts = new java.util.concurrent.atomic.AtomicLong()
-        val q5q = bids.writeStream.foreachBatch {
-          (batch: DataFrame, _: Long) =>
-            counts.addAndGet(StreamQueries.q5(batch).count()); ()
+        val q = bids.writeStream.queryName(name).foreachBatch {
+          (batch: DataFrame, _: Long) => counts.addAndGet(f(batch).count()); ()
         }.start()
         Thread.sleep(secs * 1000L)
-        q5q.stop()
-        rows = counts.get()
-      case 6 =>
-        val counts = new java.util.concurrent.atomic.AtomicLong()
-        val q = StreamQueries.q6ForeachBatch(bids, auctions) { (df, _) =>
-          counts.addAndGet(df.count())
-        }
-        Thread.sleep(secs * 1000L)
-        q.stop()
-        rows = counts.get()
-      case 7 => run(StreamQueries.q7(bids.withWatermark("b_date_time", "5 seconds")), "append")
-      case 8 => run(StreamQueries.q8(persons, auctions), "complete")
-      case 9 =>
-        val counts = new java.util.concurrent.atomic.AtomicLong()
-        val q = bids.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-          counts.addAndGet(StreamQueries.q9(batch, auctions).count()); ()
-        }.start()
-        Thread.sleep(secs * 1000L)
-        q.stop()
-        rows = counts.get()
-      case 11 =>
-        // Append-mode sessions only emit once the watermark passes
-        // session_end + gap: runs shorter than ~2x the gap emit nothing.
-        run(StreamQueries.q11(
-        bids.withWatermark("b_date_time", "5 seconds")), "append")
-      case 12 =>
-        run(StreamQueries.q12(bids, sizeMs = 2000).toDF(), "append")
-      case 13 => run(StreamQueries.q13(bids, Nexmark.sideInput(spark)), "append")
-      case other => sys.error(s"unsupported query: $other")
-    }
+        sampler.stop(q)
+        counts.get()
+      }
 
-    val wall = (System.nanoTime() - t0) / 1e9
-    progressLog.foreach(_.finish().foreach(println))
-    println(s"""{"query":$qn,"seconds":$secs,"events_per_sec":$eps,""" +
-      (if (capacityEps > 0) s""""capacity_eps":$capacityEps,""" else "") +
-      s""""out_rows":$rows,"wall_sec":${f"$wall%.2f"}}""")
-    spark.stop()
+      val rows = qn match {
+        case 0 => sink(StreamQueries.q0(bids), "append")
+        case 1 => sink(StreamQueries.q1(bids), "append")
+        case 2 => sink(StreamQueries.q2(bids), "append")
+        case 3 =>
+          // stream–static variant (stream–stream needs a second live source)
+          sink(StreamQueries.q3(auctions, persons), "append")
+        case 4 => sink(StreamQueries.q4(bids, auctions), "complete")
+        case 5 => perBatch(StreamQueries.q5(_))
+        case 6 => perBatch(StreamQueries.q6(_, auctions))
+        case 7 => sink(StreamQueries.q7(
+          bids.withWatermark("b_date_time", "5 seconds")), "append")
+        case 8 => sink(StreamQueries.q8(persons, auctions), "complete")
+        case 9 => perBatch(StreamQueries.q9(_, auctions))
+        case 11 =>
+          // Append-mode sessions only emit once the watermark passes
+          // session_end + gap: runs shorter than ~2x the gap emit nothing.
+          sink(StreamQueries.q11(
+            bids.withWatermark("b_date_time", "5 seconds")), "append")
+        case 12 => sink(StreamQueries.q12(bids, sizeMs = 2000).toDF(), "append")
+        case 13 => sink(StreamQueries.q13(bids, Nexmark.sideInput(spark)), "append")
+        case other => sys.error(s"unsupported query: $other")
+      }
+
+      val wall = (System.nanoTime() - t0) / 1e9
+      val progress =
+        if (opts.get("--progress").contains("1")) LiveRun.minutes(sampler.of(name))
+        else Nil
+      progress :+ (s"""{"query":$qn,"seconds":$secs,"events_per_sec":$eps,""" +
+        (if (capacityEps > 0) s""""capacity_eps":$capacityEps,""" else "") +
+        s""""out_rows":$rows,"wall_sec":${f"$wall%.2f"}}""")
+    }
   }
 }

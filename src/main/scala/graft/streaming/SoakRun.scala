@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{array, col, concat, count, element_at, lit, window}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Stateful-streaming soak + capacity search: runs one STATEFUL query
   * shape (tumbling/hopping/session windows, processing-time gap windows,
@@ -26,10 +26,10 @@ import org.apache.spark.sql.streaming.Trigger
   * gapspec (GapSpectrumProcessor).
   *
   * Long soak (`-soak 1 -s 600 -e <eps>`): hold one rate and print the
-  * full per-minute batch-time + state-size trajectory via a progress
-  * listener (the short-probe path reads recentProgress, which only keeps
-  * the last 100 events) — the ceiling-confirmation evidence a 40 s probe
-  * cannot give. Add `-inject N` to plant a mid-batch task failure on
+  * full per-minute batch-time + state-size trajectory — the
+  * ceiling-confirmation evidence a 40 s probe cannot give — plus a
+  * `store` object of state-store traffic over the second half of the
+  * batches. Add `-inject N` to plant a mid-batch task failure on
   * partition 0's first attempt in every stage whose id divides N
   * (FailureInjection.failEveryNthStage): the soak then proves sustained
   * throughput under a steady drip of surviving task retries, and the
@@ -69,25 +69,16 @@ import org.apache.spark.sql.streaming.Trigger
   * backlog shows up as second_half >> first_half), max batch duration,
   * final state rows/memory, and rows/s throughput.
   */
-object SoakRun {
+object SoakRun extends LiveRun.Cli("-q", "-s", "-e", "-c", "-find", "-lo",
+    "-hi", "-soak", "-inject", "-multi", "-changelog", "-admit", "-cap",
+    "-calib") {
+  import LiveRun.{Sample, mean}
 
   /** Single source of truth for the trigger cadence: both the
     * ProcessingTime trigger and the sustained criterion (mean batch time
     * under one trigger period) derive from it, so they can't drift apart.
     */
   val TriggerPeriodMs: Long = 1000L
-
-
-  /** Stop a query tolerating the stop-vs-commit race: interrupting an
-    * in-flight RocksDB commit surfaces CANNOT_COMMIT through stop(),
-    * which must not discard minutes of collected soak samples.
-    */
-  private def stopQuietly(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    try q.stop() catch {
-      case e: Exception =>
-        System.err.println(s"[soak] stop raced an in-flight commit " +
-          s"(samples retained): ${e.getMessage}")
-    }
 
   private def buildQuery(spark: SparkSession, shape: String,
       eps: Int): DataFrame =
@@ -183,6 +174,41 @@ object SoakRun {
   private def modeOf(shape: String): String =
     if (shape == "topk") "update" else "append"
 
+  /** Starts `df`, the output of `shape`, as query `name` into the noop
+    * sink on checkpoint `ckpt`, one trigger per TriggerPeriodMs.
+    */
+  private def start(df: DataFrame, name: String, shape: String,
+      ckpt: String): StreamingQuery =
+    df.writeStream.format("noop").queryName(name)
+      .outputMode(modeOf(shape))
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.ProcessingTime(s"$TriggerPeriodMs milliseconds"))
+      .start()
+
+  /** Runs `df` (the output of `shape`) for `secs` on a scratch checkpoint
+    * and returns its samples, of which there must be some. The checkpoint
+    * is deleted afterwards: 10-min RocksDB soaks leave multi-GB
+    * checkpoints behind.
+    */
+  private def sampleRun(spark: SparkSession, shape: String, df: DataFrame,
+      secs: Int): Seq[Sample] = {
+    val ckpt = Replay.scratch(s"soak_$shape")
+    val samples = try LiveRun.sampling(spark) { sampler =>
+      val q = start(df, s"soak_$shape", shape, ckpt)
+      Thread.sleep(secs * 1000L)
+      sampler.stop(q)
+    } finally Replay.delete(ckpt)
+    require(samples.nonEmpty, "no progress samples - soak too short")
+    samples
+  }
+
+  /** Keeps up iff the batches of the last five minutes average under one
+    * trigger period.
+    */
+  private def sustainedLast5(samples: Seq[Sample], secs: Int): Boolean =
+    mean(samples.filter(_.atMs >= (secs - 300) * 1000L).map(_.batchMs)) <
+      TriggerPeriodMs.toDouble
+
   private case class Probe(shape: String, eps: Int, secs: Int,
       batches: Int, inputRows: Long, meanH1: Double, meanH2: Double,
       maxMs: Long, stateRowsMid: Long, stateRowsLast: Long,
@@ -220,125 +246,68 @@ object SoakRun {
     // existence proof at its calib; an unsustained probe in a slow
     // window proves nothing about the shape.
     val calibS = warmCalibProbe(spark)
-    val ckpt = s"/tmp/soak_ckpt_${shape}_${System.currentTimeMillis()}"
-    val q = buildQuery(spark, shape, eps).writeStream.format("noop")
-      .outputMode(modeOf(shape))
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.ProcessingTime(s"$TriggerPeriodMs milliseconds"))
-      .start()
-    // Sample every progress update (recentProgress keeps the last 100;
-    // at a 1 s trigger a <=100 s soak loses nothing).
-    Thread.sleep(secs * 1000L)
-    val progress = q.recentProgress.toSeq
-    stopQuietly(q)
-    Replay.delete(ckpt)
-    case class Sample(batchMs: Long, inRows: Long, stateRows: Long,
-        stateMemBytes: Long)
-    val samples = progress.flatMap { p =>
-      val ms = Option(p.durationMs.get("triggerExecution"))
-        .map(_.longValue()).getOrElse(0L)
-      val st = p.stateOperators.headOption
-      if (p.numInputRows == 0 && ms == 0) None
-      else Some(Sample(ms, p.numInputRows,
-        st.map(_.numRowsTotal).getOrElse(0L),
-        st.map(_.memoryUsedBytes).getOrElse(0L)))
-    }
-    require(samples.nonEmpty, "no progress samples — soak too short")
+    val samples = sampleRun(spark, shape, buildQuery(spark, shape, eps), secs)
     val (h1, h2) = samples.splitAt(samples.size / 2)
-    def mean(xs: Seq[Long]): Double =
-      if (xs.isEmpty) 0 else xs.sum.toDouble / xs.size
-    Probe(shape, eps, secs, samples.size, samples.map(_.inRows).sum,
+    Probe(shape, eps, secs, samples.size, samples.map(_.inputRows).sum,
       mean(h1.map(_.batchMs)), mean(h2.map(_.batchMs)),
       samples.map(_.batchMs).max,
       h1.lastOption.map(_.stateRows).getOrElse(0L),
       samples.last.stateRows, samples.last.stateMemBytes / 1e6, calibS)
   }
 
-  /** Long soak at a fixed rate with a FULL progress trajectory: the
-    * short-probe path reads `recentProgress` (last 100 events — fine for
-    * 40-60 s probes, blind past ~100 s), so the soak attaches a
-    * StreamingQueryListener and buckets every progress event into
-    * per-minute rows. This is what distinguishes "keeps up for 40 s"
+  /** Long soak at a fixed rate with the FULL progress trajectory bucketed
+    * into per-minute rows. This is what distinguishes "keeps up for 40 s"
     * from a real ceiling: a state leak or RocksDB compaction stall shows
     * up in minutes, not seconds — flat per-minute batch means + flat
     * state rows over 10 min is the ceiling-confirmed evidence.
     */
   private def runSoak(spark: SparkSession, shape: String, eps: Int,
-      secs: Int, injectEvery: Int = 0): String = {
-    case class S(atMs: Long, batchMs: Long, inRows: Long, stateRows: Long,
-        stateMemBytes: Long)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[S]
-    val t0 = System.currentTimeMillis()
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        val ms = Option(p.durationMs.get("triggerExecution"))
-          .map(_.longValue()).getOrElse(0L)
-        val st = p.stateOperators.headOption
-        if (p.numInputRows > 0 || ms > 0) buf.synchronized {
-          buf += S(System.currentTimeMillis() - t0, ms, p.numInputRows,
-            st.map(_.numRowsTotal).getOrElse(0L),
-            st.map(_.memoryUsedBytes).getOrElse(0L))
-        }
-      }
-      override def onQueryTerminated(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
+      secs: Int, injectEvery: Int): String = {
     val (calibS, hf) = hostFactor(spark)
-    spark.streams.addListener(listener)
-    val ckpt = s"/tmp/soak_ckpt_${shape}_${System.currentTimeMillis()}"
     val retryAcc =
       if (injectEvery > 0)
         Some(spark.sparkContext.longAccumulator(s"soak_inject_$shape"))
       else None
-    try {
-      val built = buildQuery(spark, shape, eps)
-      val df = retryAcc match {
-        case Some(a) =>
-          FailureInjection.failEveryNthStage(built, a, injectEvery)
-        case None => built
-      }
-      val q = df.writeStream.format("noop")
-        .outputMode(modeOf(shape))
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.ProcessingTime(s"$TriggerPeriodMs milliseconds"))
-        .start()
-      Thread.sleep(secs * 1000L)
-      stopQuietly(q)
-    } finally {
-      spark.streams.removeListener(listener)
-      // 10-min RocksDB soaks leave multi-GB checkpoints behind.
-      Replay.delete(ckpt)
-    }
-    val samples = buf.synchronized(buf.toSeq)
-    require(samples.nonEmpty, "no progress samples — soak too short")
-    def mean(xs: Seq[Long]): Double =
-      if (xs.isEmpty) 0 else xs.sum.toDouble / xs.size
-    val minutes = samples.groupBy(_.atMs / 60000).toSeq.sortBy(_._1)
-      .map { case (m, ss) =>
-        String.format(java.util.Locale.ROOT,
-          """{"m":%d,"batches":%d,"mean_batch_ms":%.0f,"max_batch_ms":%d,""" +
-          """"state_rows":%d,"state_mem_mb":%.1f}""",
-          Long.box(m), Int.box(ss.size), Double.box(mean(ss.map(_.batchMs))),
-          Long.box(ss.map(_.batchMs).max), Long.box(ss.last.stateRows),
-          Double.box(ss.last.stateMemBytes / 1e6))
-      }
-    val lastFive = samples.filter(_.atMs >= (secs - 300) * 1000L)
-    val sustained = mean(lastFive.map(_.batchMs)) < TriggerPeriodMs.toDouble
+    val built = buildQuery(spark, shape, eps)
+    val df = retryAcc.fold(built)(
+      FailureInjection.failEveryNthStage(built, _, injectEvery))
+    val samples = sampleRun(spark, shape, df, secs)
     val injected = retryAcc.map(a =>
       s""""inject_every_stages":$injectEvery,""" +
         s""""injected_retries_survived":${a.value},""").getOrElse("")
     String.format(java.util.Locale.ROOT,
       """{"soak_shape":"%s","eps":%d,"secs":%d,"input_rows":%d,""" +
       """"calib_s":%.3f,"host_factor":%.2f,%s""" +
-      """"sustained_last5min":%b,"minutes":[%s]}""",
+      """"sustained_last5min":%b,"store":%s,"minutes":[%s]}""",
       shape, Int.box(eps), Int.box(secs),
-      Long.box(samples.map(_.inRows).sum), Double.box(calibS),
-      Double.box(hf), injected, Boolean.box(sustained),
-      minutes.mkString(","))
+      Long.box(samples.map(_.inputRows).sum), Double.box(calibS),
+      Double.box(hf), injected, Boolean.box(sustainedLast5(samples, secs)),
+      storeJson(samples), LiveRun.minutes(samples).mkString(","))
+  }
+
+  /** State-store traffic over the second half of `samples`, where RocksDB
+    * behavior has stopped being page-cache warmup: RocksDB gets, puts and
+    * rows updated per input row, and the summed update, removal and
+    * commit ms. A per-row ratio reads -1 when Spark reported no such
+    * store counter, so a renamed metric key shows instead of reading 0.
+    */
+  private def storeJson(samples: Seq[Sample]): String = {
+    val half = samples.drop(samples.size / 2)
+    val rows = half.map(_.inputRows).sum
+    def perRow(n: Long): Double = n.toDouble / rows.max(1L)
+    def metricPerRow(key: String): Double = {
+      val xs = half.flatMap(_.custom.get(key))
+      if (xs.isEmpty) -1.0 else perRow(xs.filter(_ >= 0).sum)
+    }
+    String.format(java.util.Locale.ROOT,
+      """{"batches":%d,"rows":%d,"get_per_row":%.4f,"put_per_row":%.4f,""" +
+      """"updated_per_row":%.4f,"upd_ms":%d,"rm_ms":%d,"commit_ms":%d}""",
+      Int.box(half.size), Long.box(rows),
+      Double.box(metricPerRow("rocksdbGetCount")),
+      Double.box(metricPerRow("rocksdbPutCount")),
+      Double.box(perRow(half.map(_.rowsUpdated).sum)),
+      Long.box(half.map(_.updatesMs).sum), Long.box(half.map(_.removalsMs).sum),
+      Long.box(half.map(_.commitMs).sum))
   }
 
   /** Concurrent-streams soak: all `specs` shapes run at once (own
@@ -349,51 +318,9 @@ object SoakRun {
     */
   private def runMulti(spark: SparkSession, specs: Seq[(String, Int, Int)],
       secs: Int): String = {
-    case class S(atMs: Long, batchMs: Long, inRows: Long, stateRows: Long,
-        backlogRows: Long)
-    val bufs = specs.map(_ => scala.collection.mutable.ArrayBuffer.empty[S])
-    // Route listener events by the DETERMINISTIC query name, mapped
-    // before any query starts — registering by q.id after start() races
-    // the first micro-batch's progress event (short runs could lose it
-    // and trip the samples.nonEmpty check).
-    val nameToBuf = specs.indices.map(i => s"soak_multi_$i" -> bufs(i)).toMap
-    val t0 = System.currentTimeMillis()
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        val buf = nameToBuf.get(p.name).orNull
-        if (buf != null) {
-          val ms = Option(p.durationMs.get("triggerExecution"))
-            .map(_.longValue()).getOrElse(0L)
-          val st = p.stateOperators.headOption
-          // Row-count backlog exists only for the V2 generator source
-          // (offset = id); the rate source's offsets are seconds.
-          val backlog = p.sources.headOption
-            .filter(s => Option(s.description).exists(
-              _.startsWith("nexmark-gen")))
-            .flatMap { s =>
-              (Option(s.latestOffset).flatMap(_.toLongOption),
-                Option(s.endOffset).flatMap(_.toLongOption)) match {
-                case (Some(l), Some(end)) => Some(math.max(0L, l - end))
-                case _ => None
-              }
-            }.getOrElse(-1L)
-          if (p.numInputRows > 0 || ms > 0) buf.synchronized {
-            buf += S(System.currentTimeMillis() - t0, ms, p.numInputRows,
-              st.map(_.numRowsTotal).getOrElse(0L), backlog)
-          }
-        }
-      }
-    }
     val (calibS, hf) = hostFactor(spark)
-    spark.streams.addListener(listener)
-    val base = s"/tmp/soak_multi_${System.currentTimeMillis()}"
-    try {
+    val base = Replay.scratch("soak_multi")
+    val sampled = try LiveRun.sampling(spark) { sampler =>
       val queries = specs.zipWithIndex.map { case ((shape, eps, cap), i) =>
         // cap > 0: the stream runs through the V2 generator source with
         // per-trigger admission bounded at the capacity while ids stay
@@ -409,48 +336,23 @@ object SoakRun {
                 Some(Admission.rowsPerTrigger(cap.toLong, TriggerPeriodMs)),
               eventsPerSecond = Some(eps.toLong))
           else Nexmark.bidStream(spark, rowsPerSecond = eps)
-        buildShape(spark, shape, bids).writeStream.format("noop")
-          .queryName(s"soak_multi_$i")
-          .outputMode(modeOf(shape))
-          .option("checkpointLocation", s"$base/ckpt_$i")
-          .trigger(Trigger.ProcessingTime(s"$TriggerPeriodMs milliseconds"))
-          .start()
+        start(buildShape(spark, shape, bids), s"soak_multi_$i", shape,
+          s"$base/ckpt_$i")
       }
       Thread.sleep(secs * 1000L)
-      queries.foreach(stopQuietly)
-    } finally {
-      spark.streams.removeListener(listener)
-      Replay.delete(base)
-    }
-    def mean(xs: Seq[Long]): Double =
-      if (xs.isEmpty) 0 else xs.sum.toDouble / xs.size
-    val perQuery = specs.zip(bufs).map { case ((shape, eps, cap), b) =>
-      val samples = b.synchronized(b.toSeq)
+      queries.map(sampler.stop)
+    } finally Replay.delete(base)
+    val perQuery = specs.zip(sampled).map { case ((shape, eps, cap), samples) =>
       require(samples.nonEmpty, s"no progress samples for $shape")
-      val minutes = samples.groupBy(_.atMs / 60000).toSeq.sortBy(_._1)
-        .map { case (m, ss) =>
-          val backlog = ss.reverseIterator.map(_.backlogRows)
-            .find(_ >= 0).map(b => s""","backlog_rows":$b""").getOrElse("")
-          String.format(java.util.Locale.ROOT,
-            """{"m":%d,"batches":%d,"mean_batch_ms":%.0f,""" +
-            """"max_batch_ms":%d,"state_rows":%d%s}""",
-            Long.box(m), Int.box(ss.size),
-            Double.box(mean(ss.map(_.batchMs))),
-            Long.box(ss.map(_.batchMs).max), Long.box(ss.last.stateRows),
-            backlog)
-        }
-      val lastFive = samples.filter(_.atMs >= (secs - 300) * 1000L)
-      val sustained =
-        mean(lastFive.map(_.batchMs)) < TriggerPeriodMs.toDouble
       // Admission ledger (cap > 0): measured backlog slope over the run
       // vs the contract's offered − admitted. Slope is taken between the
       // first and last backlog-bearing samples.
       val admission = if (cap <= 0) "" else {
-        val withB = samples.filter(_.backlogRows >= 0)
+        val withB = samples.flatMap(s => s.backlogRows.map(s.atMs -> _))
         val slope =
           if (withB.size < 2) Double.NaN
-          else (withB.last.backlogRows - withB.head.backlogRows) * 1000.0 /
-            math.max(1L, withB.last.atMs - withB.head.atMs)
+          else (withB.last._2 - withB.head._2) * 1000.0 /
+            math.max(1L, withB.last._1 - withB.head._1)
         String.format(java.util.Locale.ROOT,
           """"cap_eps":%d,"backlog_slope_rows_per_s":%.0f,""" +
           """"expected_slope_rows_per_s":%d,""",
@@ -461,8 +363,9 @@ object SoakRun {
         """{"shape":"%s","eps":%d,%s"input_rows":%d,""" +
         """"sustained_last5min":%b,"minutes":[%s]}""",
         shape, Int.box(eps), admission,
-        Long.box(samples.map(_.inRows).sum),
-        Boolean.box(sustained), minutes.mkString(","))
+        Long.box(samples.map(_.inputRows).sum),
+        Boolean.box(sustainedLast5(samples, secs)),
+        LiveRun.minutes(samples).mkString(","))
     }
     String.format(java.util.Locale.ROOT,
       """{"multi_soak_secs":%d,"calib_s":%.3f,"host_factor":%.2f,""" +
@@ -515,10 +418,6 @@ object SoakRun {
     */
   private def runAdmitSoak(spark: SparkSession, shape: String,
       offeredEps: Int, capEps: Int, secs: Int): String = {
-    import org.apache.spark.sql.functions.col
-    val base = s"/tmp/soak_admit_${shape}_${System.currentTimeMillis()}"
-    val (stage, in, ckpt) = (s"$base/stage", s"$base/in", s"$base/ckpt")
-    new java.io.File(in).mkdirs()
     // Eighth-second ticks: fine enough that the admitted-rows bound can
     // sit within ~12% of capacity (file admission is whole-file).
     val ticksPerSec = 8
@@ -529,94 +428,51 @@ object SoakRun {
     val (calibS, hf) = hostFactor(spark)
     System.err.println(s"[soak] admit mode: offered=$offeredEps cap=$capEps" +
       s" rowsPerTick=$rowsPerTick filesPerTrigger=$filesPerTrig")
-
-    // Pre-generate one parquet file per tick (deterministic generator ids;
-    // event time = id / offeredEps seconds past the NEXMark base).
-    val total = rowsPerTick * nTicks
-    Nexmark.bidsFromIds(
-        spark.range(0L, total, 1L, 32).toDF()
-          .withColumn("tick", (col("id") / rowsPerTick).cast("long")),
-        eventsPerSecond = offeredEps.toLong, keep = Seq("tick"))
-      .repartition(nTicks, col("tick"))
-      .write.partitionBy("tick").mode("overwrite").parquet(stage)
-    val tickFile: Int => java.io.File = i => {
-      val d = new java.io.File(stage, s"tick=$i")
-      d.listFiles().filter(_.getName.startsWith("part-")).head
-    }
-
-    // Progress listener: per-minute batch/state trajectory + cumulative
-    // processed rows (for the backlog ledger).
-    case class S(atMs: Long, batchMs: Long, inRows: Long, stateRows: Long,
-        landedRows: Long)
-    val landed = new java.util.concurrent.atomic.AtomicLong(0L)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[S]
-    val t0 = System.currentTimeMillis()
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        val ms = Option(p.durationMs.get("triggerExecution"))
-          .map(_.longValue()).getOrElse(0L)
-        val st = p.stateOperators.headOption
-        if (p.numInputRows > 0 || ms > 0) buf.synchronized {
-          buf += S(System.currentTimeMillis() - t0, ms, p.numInputRows,
-            st.map(_.numRowsTotal).getOrElse(0L), landed.get())
-        }
+    val base = Replay.scratch(s"soak_admit_$shape")
+    val (stage, in, ckpt) = (s"$base/stage", s"$base/in", s"$base/ckpt")
+    // Landing time of each tick on the sampler's clock: the ledger the
+    // samples join by timestamp for backlog = landed − processed.
+    val landedAt = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val samples = try {
+      new java.io.File(in).mkdirs()
+      // Pre-generate one parquet file per tick (deterministic generator
+      // ids; event time = id / offeredEps seconds past the NEXMark base).
+      Nexmark.bidsFromIds(
+          spark.range(0L, rowsPerTick * nTicks, 1L, 32).toDF()
+            .withColumn("tick", (col("id") / rowsPerTick).cast("long")),
+          eventsPerSecond = offeredEps.toLong, keep = Seq("tick"))
+        .repartition(nTicks, col("tick"))
+        .write.partitionBy("tick").mode("overwrite").parquet(stage)
+      val tickFile: Int => java.io.File = i => {
+        val d = new java.io.File(stage, s"tick=$i")
+        d.listFiles().filter(_.getName.startsWith("part-")).head
       }
-      override def onQueryTerminated(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
-    try {
       val schema = spark.read.parquet(s"$stage/tick=0").schema
       val bids = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", filesPerTrig).parquet(in)
-      val q = buildShape(spark, shape, bids).writeStream.format("noop")
-        .outputMode(modeOf(shape))
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.ProcessingTime(s"$TriggerPeriodMs milliseconds"))
-        .start()
-      // Feeder: move tick i into the watched dir at t0 + i*125 ms — a
-      // rename, so landing cost is O(1) and the offered rate is exact.
-      val feedEnd = System.currentTimeMillis() + secs * 1000L
-      var i = 0
-      while (System.currentTimeMillis() < feedEnd && i < nTicks) {
-        val due = t0 + i.toLong * 1000L / ticksPerSec
-        val wait = due - System.currentTimeMillis()
-        if (wait > 0) Thread.sleep(wait)
-        val dst = new java.io.File(in, f"t$i%06d.parquet")
-        java.nio.file.Files.move(tickFile(i).toPath, dst.toPath)
-        landed.addAndGet(rowsPerTick): Unit
-        i += 1
+      LiveRun.sampling(spark) { sampler =>
+        val q = start(buildShape(spark, shape, bids), s"soak_admit_$shape",
+          shape, ckpt)
+        // Feeder: move tick i into the watched dir i*125 ms after the
+        // sampler attached — a rename, so landing cost is O(1) and the
+        // offered rate is exact.
+        var i = 0
+        while (sampler.elapsedMs < secs * 1000L && i < nTicks) {
+          val wait = i.toLong * 1000L / ticksPerSec - sampler.elapsedMs
+          if (wait > 0) Thread.sleep(wait)
+          val dst = new java.io.File(in, f"t$i%06d.parquet")
+          java.nio.file.Files.move(tickFile(i).toPath, dst.toPath)
+          landedAt += sampler.elapsedMs
+          i += 1
+        }
+        sampler.stop(q)
       }
-      stopQuietly(q)
-    } finally {
-      spark.streams.removeListener(listener)
-      Replay.delete(base)
+    } finally Replay.delete(base)
+    require(samples.nonEmpty, "no progress samples - soak too short")
+    val processed = samples.scanLeft(0L)(_ + _.inputRows).tail
+    val backlogged = samples.zip(processed).map { case (s, done) =>
+      s.copy(backlogRows = Some(rowsPerTick * landedAt.count(_ <= s.atMs) - done))
     }
-    val samples = buf.synchronized(buf.toSeq)
-    require(samples.nonEmpty, "no progress samples — soak too short")
-    def mean(xs: Seq[Long]): Double =
-      if (xs.isEmpty) 0 else xs.sum.toDouble / xs.size
-    var processed = 0L
-    val withBacklog = samples.map { s =>
-      processed += s.inRows
-      (s, s.landedRows - processed)
-    }
-    val minutes = withBacklog.groupBy(_._1.atMs / 60000).toSeq.sortBy(_._1)
-      .map { case (m, ss) =>
-        String.format(java.util.Locale.ROOT,
-          """{"m":%d,"batches":%d,"mean_batch_ms":%.0f,"max_batch_ms":%d,""" +
-          """"state_rows":%d,"backlog_rows":%d}""",
-          Long.box(m), Int.box(ss.size),
-          Double.box(mean(ss.map(_._1.batchMs))),
-          Long.box(ss.map(_._1.batchMs).max),
-          Long.box(ss.last._1.stateRows), Long.box(ss.last._2))
-      }
-    val lastFive = samples.filter(_.atMs >= (secs - 300) * 1000L)
-    val sustained = mean(lastFive.map(_.batchMs)) < TriggerPeriodMs.toDouble
     String.format(java.util.Locale.ROOT,
       """{"admit_soak_shape":"%s","offered_eps":%d,"cap_eps":%d,""" +
       """"files_per_trigger":%d,"secs":%d,"input_rows":%d,""" +
@@ -624,91 +480,26 @@ object SoakRun {
       """"calib_s":%.3f,"host_factor":%.2f,""" +
       """"sustained_last5min":%b,"minutes":[%s]}""",
       shape, Int.box(offeredEps), Int.box(capEps), Int.box(filesPerTrig),
-      Int.box(secs), Long.box(samples.map(_.inRows).sum),
-      Long.box(landed.get()), Long.box(withBacklog.last._2),
+      Int.box(secs), Long.box(processed.last),
+      Long.box(rowsPerTick * landedAt.size),
+      Long.box(backlogged.last.backlogRows.get),
       Double.box(calibS), Double.box(hf),
-      Boolean.box(sustained), minutes.mkString(","))
+      Boolean.box(sustainedLast5(samples, secs)),
+      LiveRun.minutes(backlogged).mkString(","))
   }
 
-  def main(args: Array[String]): Unit = {
-    val opts = args.grouped(2).map {
-      case Array(k, v) if k.startsWith("-") && !v.startsWith("-") => k -> v
-      case other => sys.error(
-        s"bad argument pair '${other.mkString(" ")}' — expected -flag value")
-    }.toMap
-    val shape = opts.getOrElse("-q", "q11")
-    val secs = opts.getOrElse("-s", "60").toInt
-    val eps = opts.getOrElse("-e", "100000").toInt
-    val cpus = opts.getOrElse("-c", "8").toInt
-    val find = opts.get("-find").contains("1")
-    val soak = opts.get("-soak").contains("1")
-
-    val b = SparkSession.builder()
-      // local[N,2]: one task retry — production-faithful, and required by
-      // the -inject soak's surviving-retry proof.
-      .master(s"local[$cpus,2]")
-      .appName(s"graft-soak-$shape")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-    if (opts.get("-changelog").contains("1"))
-      b.config("spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled", "true"): Unit
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    if (opts.get("-calib").contains("1")) {
-      val (s, f) = hostFactor(spark)
-      println(String.format(java.util.Locale.ROOT,
-        """{"calib_s":%.3f,"host_factor":%.2f}""",
-        Double.box(s), Double.box(f)))
-      spark.stop()
-      return
-    }
-    if (opts.get("-admit").contains("1")) {
-      val cap = opts.getOrElse("-cap",
-        sys.error("-admit 1 requires -cap <capacity eps>")).toInt
-      println(runAdmitSoak(spark, shape, eps, cap, secs))
-      spark.stop()
-      return
-    }
-    if (opts.contains("-multi")) {
-      // shape:offeredEps[:capacityEps] — a third field bounds that
-      // stream's per-trigger admission through the V2 source (ids stay
-      // available at the offered rate; overload becomes source backlog).
-      val specs = opts("-multi").split(",").toSeq.map { s =>
-        s.split(":") match {
-          case Array(sh, e) => (sh.trim, e.trim.toInt, 0)
-          case Array(sh, e, c) => (sh.trim, e.trim.toInt, c.trim.toInt)
-          case other => sys.error(s"bad -multi spec '${other.mkString(":")}'")
-        }
-      }
-      println(runMulti(spark, specs, secs))
-      spark.stop()
-      return
-    }
-    if (soak) {
-      println(runSoak(spark, shape, eps, secs,
-        injectEvery = opts.getOrElse("-inject", "0").toInt))
-      spark.stop()
-      return
-    }
-    if (!find) {
-      println(runProbe(spark, shape, eps, secs).json)
-      spark.stop()
-      return
-    }
-
-    // Capacity search: double from -lo until unsustained (or -hi), then
-    // bisect. Every probe prints, so the trajectory evidence (state rows,
-    // half-means) is in the log next to the verdict.
-    val lo0 = opts.getOrElse("-lo", "100000").toInt
-    val hi0 = opts.getOrElse("-hi", "3200000").toInt
+  /** Capacity search: double from `lo0` until unsustained (or past
+    * `hi0`), then bisect. Every probe's line is kept, so the trajectory
+    * evidence (state rows, half-means) sits next to the verdict.
+    */
+  private def findCapacity(spark: SparkSession, shape: String, secs: Int,
+      lo0: Int, hi0: Int, cpus: Int): Seq[String] = {
+    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
     def probe(e: Int): Probe = {
       val p = runProbe(spark, shape, e, secs)
-      println(p.json)
+      // A search runs for many minutes: each verdict shows as it lands.
+      System.err.println(s"[soak] ${p.json}")
+      lines += p.json
       p
     }
     var lo = 0
@@ -723,28 +514,78 @@ object SoakRun {
       // the largest observed-sustained rate and NO failure rate, instead
       // of bisecting into rates above the cap the user asked not to
       // exceed (r10 advice).
-      println(s"""{"capacity_shape":"$shape","max_sustained_eps":$lo,""" +
-        s""""first_unsustained_eps":null,"cpus":$cpus,"probe_secs":$secs}""")
-      spark.stop()
-      return
+      lines += s"""{"capacity_shape":"$shape","max_sustained_eps":$lo,""" +
+        s""""first_unsustained_eps":null,"cpus":$cpus,"probe_secs":$secs}"""
+    } else {
+      // First rate already failed: halve DOWN with real probes until a
+      // sustained rate is found — max_sustained must always be a rate
+      // that was actually observed keeping up, never an assumed floor.
+      while (lo == 0 && hi > 12500) {
+        val cand = hi / 2
+        if (probe(cand).sustained) lo = cand else hi = cand
+      }
+      while (hi.toDouble / lo > 1.125 && hi - lo > 25000) {
+        val mid = (lo + hi) / 2
+        if (probe(mid).sustained) lo = mid else hi = mid
+      }
+      val (calibS, hf) = hostFactor(spark)
+      lines += s"""{"capacity_shape":"$shape","max_sustained_eps":$lo,""" +
+        s""""first_unsustained_eps":$hi,"cpus":$cpus,"probe_secs":$secs,""" +
+        String.format(java.util.Locale.ROOT,
+          """"calib_s":%.3f,"host_factor":%.2f}""",
+          Double.box(calibS), Double.box(hf))
     }
-    // First rate already failed: halve DOWN with real probes until a
-    // sustained rate is found — max_sustained must always be a rate
-    // that was actually observed keeping up, never an assumed floor.
-    while (lo == 0 && hi > 12500) {
-      val cand = hi / 2
-      if (probe(cand).sustained) lo = cand else hi = cand
+    lines.toSeq
+  }
+
+  def session(opts: Map[String, String]): SparkSession = {
+    val cpus = opts.getOrElse("-c", "8").toInt
+    graft.Session.local(s"graft-soak-${opts.getOrElse("-q", "q11")}",
+      // local[N,2]: one task retry — production-faithful, and required by
+      // the -inject soak's surviving-retry proof.
+      s"local[$cpus,2]", cpus)
+  }
+
+  def run(spark: SparkSession, opts: Map[String, String]): Seq[String] = {
+    val shape = opts.getOrElse("-q", "q11")
+    val secs = opts.getOrElse("-s", "60").toInt
+    val eps = opts.getOrElse("-e", "100000").toInt
+    val changelog =
+      if (opts.get("-changelog").contains("1"))
+        Seq("spark.sql.streaming.stateStore.rocksdb." +
+          "changelogCheckpointing.enabled" -> "true")
+      else Nil
+    ReplayConfs.withConfs(spark, (ReplayConfs.RocksState +: changelog): _*) {
+      if (opts.get("-calib").contains("1")) {
+        val (s, f) = hostFactor(spark)
+        Seq(String.format(java.util.Locale.ROOT,
+          """{"calib_s":%.3f,"host_factor":%.2f}""",
+          Double.box(s), Double.box(f)))
+      } else if (opts.get("-admit").contains("1")) {
+        val cap = opts.getOrElse("-cap",
+          sys.error("-admit 1 requires -cap <capacity eps>")).toInt
+        Seq(runAdmitSoak(spark, shape, eps, cap, secs))
+      } else if (opts.contains("-multi")) {
+        // shape:offeredEps[:capacityEps] — a third field bounds that
+        // stream's per-trigger admission through the V2 source (ids stay
+        // available at the offered rate; overload becomes source backlog).
+        val specs = opts("-multi").split(",").toSeq.map { s =>
+          s.split(":") match {
+            case Array(sh, e) => (sh.trim, e.trim.toInt, 0)
+            case Array(sh, e, c) => (sh.trim, e.trim.toInt, c.trim.toInt)
+            case other => sys.error(s"bad -multi spec '${other.mkString(":")}'")
+          }
+        }
+        Seq(runMulti(spark, specs, secs))
+      } else if (opts.get("-soak").contains("1"))
+        Seq(runSoak(spark, shape, eps, secs,
+          injectEvery = opts.getOrElse("-inject", "0").toInt))
+      else if (opts.get("-find").contains("1"))
+        findCapacity(spark, shape, secs,
+          opts.getOrElse("-lo", "100000").toInt,
+          opts.getOrElse("-hi", "3200000").toInt,
+          opts.getOrElse("-c", "8").toInt)
+      else Seq(runProbe(spark, shape, eps, secs).json)
     }
-    while (hi.toDouble / lo > 1.125 && hi - lo > 25000) {
-      val mid = (lo + hi) / 2
-      if (probe(mid).sustained) lo = mid else hi = mid
-    }
-    val (calibS2, hf2) = hostFactor(spark)
-    println(s"""{"capacity_shape":"$shape","max_sustained_eps":$lo,""" +
-      s""""first_unsustained_eps":$hi,"cpus":$cpus,"probe_secs":$secs,""" +
-      String.format(java.util.Locale.ROOT,
-        """"calib_s":%.3f,"host_factor":%.2f}""",
-        Double.box(calibS2), Double.box(hf2)))
-    spark.stop()
   }
 }

@@ -1271,12 +1271,8 @@ object StreamFuzz {
       // local[8,2] like the sweep main: an injected-sweep failure must be
       // reproducible through --debug with SPARK_GRAFT_INJECT_FUZZ=1, which
       // needs task retries enabled (r12 advice).
-      val spark = SparkSession.builder().master("local[8,2]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = graft.Session.local("graft-streamfuzz", "local[8,2]", 4,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
       debugSeed(spark, args(1).toInt)
       spark.stop()
       return
@@ -1293,17 +1289,12 @@ object StreamFuzz {
     }
     val n = args.headOption.map(_.toInt).getOrElse(DefaultSeeds)
     val first = args.lift(1).map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
+    val spark = graft.Session.local("graft-streamfuzz",
       // local[8,2]: one task retry — the production-faithful setting, and
       // what lets SPARK_GRAFT_INJECT_FUZZ=1 run the corpus under
       // mid-batch task-failure injection (see maybeInject).
-      .master("local[8,2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "local[8,2]", 4,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     var nFail = 0
     (first until first + n).foreach { seed =>
       val t0 = System.nanoTime()

@@ -17,33 +17,19 @@ import org.apache.spark.sql.streaming.Trigger
   * same graceful-overload contract); `--progress 1` prints one JSON
   * trajectory line per elapsed minute.
   */
-object YsbRun {
-  def main(args: Array[String]): Unit = {
-    // Strict flag/value pairing: a dangling flag or a value where a flag
-    // belongs aborts the run instead of silently mis-attributing knobs.
-    val opts = args.grouped(2).map {
-      case Array(k, v) if k.startsWith("-") && !v.startsWith("-") => k -> v
-      case other => sys.error(
-        s"bad argument pair '${other.mkString(" ")}' — expected -flag value")
-    }.toMap
+object YsbRun extends LiveRun.Cli("-e", "-s", "-g", "--window",
+    "--capacity-eps", "--progress") {
+
+  def session(opts: Map[String, String]): SparkSession =
+    graft.Session.local("ysb", "local[8]", 8)
+
+  def run(spark: SparkSession, opts: Map[String, String]): Seq[String] = {
     val eps = opts.getOrElse("-e", "1000").toInt
     val secs = opts.getOrElse("-s", "20").toInt
     val generators = opts.getOrElse("-g", "8").toInt
     val windowSec = opts.getOrElse("--window", "10").toInt
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("ysb")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     val capacityEps = opts.getOrElse("--capacity-eps", "0").toLong
-    val progressLog =
-      if (opts.get("--progress").contains("1")) Some(new ProgressLog(spark))
-      else None
     val events =
       if (capacityEps > 0)
         Ysb.adEventStreamV2(spark, totalEvents = eps.toLong * secs * 2,
@@ -54,27 +40,30 @@ object YsbRun {
         eventsPerSecond = eps, generators = generators)
     val result = Ysb.query(events, Ysb.campaigns(spark), s"$windowSec seconds")
 
-    val t0 = System.nanoTime()
-    // Complete mode: the windowed count has no watermark (the reference
-    // emits every window's running count), so the sink holds the current
-    // totals per (window, campaign).
-    val q = result.writeStream.format("memory").queryName("ysb_run")
-      .outputMode("complete").trigger(Trigger.ProcessingTime("1 second"))
-      .start()
-    Thread.sleep(secs * 1000L)
-    // Measured INPUT rows from the stream's own progress log — out_rows is
-    // bounded by windows x campaigns, so it cannot measure throughput.
-    val inputRows = q.recentProgress.map(_.numInputRows).sum
-    q.stop()
-    val rows = spark.table("ysb_run").count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    val measuredEps = if (wall > 0) inputRows / wall else 0.0
-    progressLog.foreach(_.finish().foreach(println))
-    println(s"""{"benchmark":"ysb","seconds":$secs,"events_per_sec":$eps,""" +
-      (if (capacityEps > 0) s""""capacity_eps":$capacityEps,""" else "") +
-      s""""generators":$generators,"window_sec":$windowSec,""" +
-      s""""campaign_windows":$rows,"input_rows":$inputRows,""" +
-      s""""wall_sec":${f"$wall%.2f"},"measured_eps":${f"$measuredEps%.0f"}}""")
-    spark.stop()
+    LiveRun.sampling(spark) { sampler =>
+      val t0 = System.nanoTime()
+      // Complete mode: the windowed count has no watermark (the reference
+      // emits every window's running count), so the sink holds the current
+      // totals per (window, campaign).
+      val q = result.writeStream.format("memory").queryName("ysb_run")
+        .outputMode("complete").trigger(Trigger.ProcessingTime("1 second"))
+        .start()
+      Thread.sleep(secs * 1000L)
+      val samples = sampler.stop(q)
+      // Measured INPUT rows from every batch's progress — out_rows is
+      // bounded by windows x campaigns, so it cannot measure throughput.
+      val inputRows = samples.map(_.inputRows).sum
+      val rows = spark.table("ysb_run").count()
+      val wall = (System.nanoTime() - t0) / 1e9
+      val measuredEps = if (wall > 0) inputRows / wall else 0.0
+      val progress =
+        if (opts.get("--progress").contains("1")) LiveRun.minutes(samples)
+        else Nil
+      progress :+ (s"""{"benchmark":"ysb","seconds":$secs,"events_per_sec":$eps,""" +
+        (if (capacityEps > 0) s""""capacity_eps":$capacityEps,""" else "") +
+        s""""generators":$generators,"window_sec":$windowSec,""" +
+        s""""campaign_windows":$rows,"input_rows":$inputRows,""" +
+        s""""wall_sec":${f"$wall%.2f"},"measured_eps":${f"$measuredEps%.0f"}}""")
+    }
   }
 }

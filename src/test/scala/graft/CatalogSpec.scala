@@ -6,21 +6,12 @@ import org.apache.spark.sql.expressions.Window
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      // local[4,2] = one task retry, the production-faithful setting (real
-      // clusters run maxFailures=4). Deterministic test failures still
-      // fail — a retry re-hits them — and FailureInjectionSpec needs a
-      // first attempt to be retryable at all.
-      .master("local[4,2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = Session.local("graft-test",
+    // local[4,2] = one task retry, the production-faithful setting (real
+    // clusters run maxFailures=4). Deterministic test failures still
+    // fail — a retry re-hits them — and FailureInjectionSpec needs a
+    // first attempt to be retryable at all.
+    "local[4,2]", 4)
 }
 
 /** Every catalog query must execute end-to-end on sf0.001 and produce a
