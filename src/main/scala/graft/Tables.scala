@@ -78,6 +78,16 @@ object Tables {
     * Spark's own error for it.
     */
   private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val (qualified, files) = listing(spark, path)
+    val key = SchemaKey(qualified, files, inferenceConfs.map(spark.conf.getOption))
+    val schema = schemaCache.getOrElseUpdate(key, spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The qualified form of `path` and the (path, length, mtime) of every
+    * file under it, sorted; no files when `path` is missing. */
+  private def listing(spark: SparkSession, path: String)
+      : (String, Seq[(String, Long, Long)]) = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val qualified = fs.makeQualified(p)
@@ -89,10 +99,7 @@ object Tables {
           .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
           .toSeq.sorted
       }
-    val key = SchemaKey(qualified.toString, files,
-      inferenceConfs.map(spark.conf.getOption))
-    val schema = schemaCache.getOrElseUpdate(key, spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
+    (qualified.toString, files)
   }
 
   /** TESTDATA ships no `partsupp`, so the TPC-H queries that need one
@@ -102,8 +109,9 @@ object Tables {
     * joins a partsupp row, as dbgen guarantees) — with availqty/supplycost
     * derived deterministically from md5 of the key pair. Both engines
     * re-derive the identical table from the same parquet (the md5→60-bit
-    * pattern proven by the dedup oracles), so the derivation itself is
-    * oracle-checked, not just the query over it.
+    * pattern proven by the dedup oracles: Spark's native `hash60` kernel,
+    * `graft.functions.Hash60`, against DuckDB's hex-prefix cast), so the
+    * derivation itself is oracle-checked, not just the query over it.
     */
   private def partsuppSql(hash60: String => String): String = {
     val key = (salt: String) =>
@@ -116,8 +124,9 @@ object Tables {
           FROM lineitem)"""
   }
 
-  val partsuppSpark: String = partsuppSql(s =>
-    s"CAST(conv(substr(md5($s), 1, 15), 16, 10) AS BIGINT)")
+  /** The Spark side hashes with the `hash60` SQL function, which `derived`
+    * registers on the session first. */
+  val partsuppSpark: String = partsuppSql(s => s"hash60($s)")
 
   val partsuppDuck: String = partsuppSql(s =>
     s"('0x' || substr(md5($s), 1, 15))::BIGINT")
@@ -163,7 +172,7 @@ object Tables {
 
   val lineitemExtSpark: String = lineitemExtSql(
     "lineitem",
-    s => s"CAST(conv(substr(md5($s), 1, 15), 16, 10) AS BIGINT)",
+    s => s"hash60($s)",
     (d, n) => s"timestampadd(DAY, $n, $d)",
     (vals, idx) => s"element_at(array($vals), ($idx) + 1)")
 
@@ -177,45 +186,74 @@ object Tables {
     (d, n) => s"($d + INTERVAL ($n) DAY)",
     (vals, idx) => s"([$vals])[($idx) + 1]")
 
-  /** Materialized derived views, keyed by sf dir: the md5 derivations are
-    * deterministic per-row, but queries like TPC-H q21 scan lineitem three
-    * times (l1/l2/l3), recomputing the whole md5 chain per scan replica —
-    * measured as the two slowest TPC-H entries at sf0.1. Materializing the
-    * derived tables ONCE per (dir, JVM) to session-local temp parquet keeps
-    * column pruning and filter pushdown (which a localCheckpoint'd RDD
-    * would lose) and turns each replica scan into a plain parquet read. On
-    * a cluster the durable form is a warehouse table or a cached view; the
-    * oracle side is untouched — DuckDB still re-derives from the raw
-    * parquet, so the derivation itself stays oracle-checked.
+  /** The Spark frames of the derived views, named `partsupp` and
+    * `lineitem_ext`, over `dir`'s raw lineitem, which this registers as the
+    * `lineitem` view. It registers `hash60` first: sessions built without
+    * `spark.sql.extensions` (`Session.local`, perfbench's) lack it.
     */
-  private val derivedCache = scala.collection.concurrent.TrieMap.empty[String, String]
+  private[graft] def derived(spark: SparkSession, dir: String): Seq[(String, DataFrame)] = {
+    if (!spark.catalog.functionExists("hash60"))
+      graft.functions.GraftExtensions.register(spark, "hash60")
+    load(spark, dir, "lineitem").createOrReplaceTempView("lineitem")
+    Seq("partsupp" -> spark.sql(partsuppSpark),
+      "lineitem_ext" -> spark.sql(lineitemExtSpark))
+  }
 
-  private def materializedDir(spark: SparkSession, dir: String): String =
-    derivedCache.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files.createTempDirectory("graft_derived_")
-      // The materialized views live for this JVM only (the cache key is
-      // per-process); without cleanup every Verify/Bench/test JVM leaks a
-      // multi-MB dir into /tmp until the disk fills.
-      graft.streaming.Replay.deleteOnExit(base.toString)
-      // partsupp derives from the RAW lineitem view; register raw first.
-      load(spark, dir, "lineitem").createOrReplaceTempView("lineitem")
-      spark.sql(partsuppSpark).write.parquet(s"$base/partsupp")
-      spark.sql(lineitemExtSpark).write.parquet(s"$base/lineitem_ext")
-      base.toString
-    })
+  /** What a materialization depends on: the dir as spelled, and the
+    * (path, length, mtime) of every lineitem file, so a lineitem rewritten
+    * at the same path is derived again. The dir is deliberately not
+    * qualified: each spelling of a dir gets its own materialization. */
+  private final case class DerivedKey(dir: String, lineitem: Seq[(String, Long, Long)])
+
+  /** One materialized view: the temp view it registers as, its parquet
+    * dir, and the schema its write produced, as parquet inference would
+    * report it (every column nullable). */
+  private[graft] final case class Materialized(view: String, path: String, schema: StructType)
+
+  /** Materialized derived views, keyed by `DerivedKey`: the md5
+    * derivations are deterministic per-row, but queries like TPC-H q21
+    * scan lineitem three times (l1/l2/l3), recomputing the whole md5 chain
+    * per scan replica — measured as the two slowest TPC-H entries at
+    * sf0.1. Materializing the derived tables ONCE per (key, JVM) to
+    * session-local temp parquet keeps column pruning and filter pushdown
+    * (which a localCheckpoint'd RDD would lose) and turns each replica scan
+    * into a plain parquet read. On a cluster the durable form is a
+    * warehouse table or a cached view; the oracle side is untouched —
+    * DuckDB still re-derives from the raw parquet, so the derivation itself
+    * stays oracle-checked.
+    */
+  private val derivedCache =
+    scala.collection.concurrent.TrieMap.empty[DerivedKey, Seq[Materialized]]
+
+  private[graft] def materialized(spark: SparkSession, dir: String): Seq[Materialized] =
+    derivedCache.getOrElseUpdate(
+      DerivedKey(dir, listing(spark, s"$dir/lineitem.parquet")._2), {
+        val base = java.nio.file.Files.createTempDirectory("graft_derived_")
+        // The materialized views live for this JVM only (the cache key is
+        // per-process); without cleanup every Verify/Bench/test JVM leaks a
+        // multi-MB dir into /tmp until the disk fills.
+        graft.streaming.Replay.deleteOnExit(base.toString)
+        derived(spark, dir).map { case (name, df) =>
+          val path = s"$base/$name"
+          df.write.parquet(path)
+          Materialized(if (name == "partsupp") name else "lineitem", path,
+            org.apache.spark.sql.graft.shims.asNullable(df.schema))
+        }
+      })
 
   /** Register every table in `dir` as a temp view named after the table,
     * plus the derived `partsupp` view and the extended `lineitem` view
-    * (materialized once per dir — see `materializedDir`). Idempotent. After
-    * the first call per dir it submits no Spark job: every read goes
-    * through `readParquet`, whose schema cache is keyed by qualified path,
-    * each listed file's length and mtime, and the parquet inference confs,
-    * so a call costs one file listing per table and scans stay lazy.
+    * (materialized once per dir and lineitem version — see `materialized`).
+    * Idempotent. After the first call per dir it submits no Spark job:
+    * every raw read goes through `readParquet`, whose schema cache is keyed
+    * by qualified path, each listed file's length and mtime, and the
+    * parquet inference confs, and the derived views are read with the
+    * schema their write produced, so a call costs one file listing per
+    * table and scans stay lazy.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
     all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-    val base = materializedDir(spark, dir)
-    readParquet(spark, s"$base/partsupp").createOrReplaceTempView("partsupp")
-    readParquet(spark, s"$base/lineitem_ext").createOrReplaceTempView("lineitem")
+    for (m <- materialized(spark, dir))
+      spark.read.schema(m.schema).parquet(m.path).createOrReplaceTempView(m.view)
   }
 }

@@ -20,7 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - shingle i = tokens[i..i+2] joined with ' ';
   *   - h1 = first 15 md5-hex chars as a 60-bit int (== top 60 bits of the
   *     first 8 digest bytes), h2 = hex chars 17..31 (== top 60 bits of
-  *     bytes 8..15);
+  *     bytes 8..15): `hash60` halves 0 and 1, read by the same helper
+  *     (`Hash60.prefix60`);
   *   - permutation j = min over shingles of h1 ^ (j * h2).
   *
   * Returns array<bigint> of length k, or NULL when the text has fewer than
@@ -78,7 +79,6 @@ object MinHashShingleSig {
   def compute(input: UTF8String, k: Int): ArrayData = {
     val words = input.toString.split(" ", -1)
     if (words.length < 3) return null
-    val md = java.security.MessageDigest.getInstance("MD5")
     val mins = Array.fill(k)(Long.MaxValue)
     val sb = new java.lang.StringBuilder(64)
     var i = 0
@@ -86,20 +86,12 @@ object MinHashShingleSig {
       sb.setLength(0)
       sb.append(words(i)).append(' ').append(words(i + 1)).append(' ')
         .append(words(i + 2))
-      md.reset()
-      val d = md.digest(sb.toString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      // Top 60 bits of bytes 0..7 and of bytes 8..15 == the 15-hex-char
-      // prefixes the SQL formulation parses.
-      var l0 = 0L; var l1 = 0L
-      var b = 0
-      while (b < 8) {
-        l0 = (l0 << 8) | (d(b) & 0xffL)
-        l1 = (l1 << 8) | (d(b + 8) & 0xffL)
-        b += 1
-      }
-      val h1 = l0 >>> 4
-      val h2 = l1 >>> 4
+      val d = Hash60.digest(java.nio.ByteBuffer.wrap(sb.toString.getBytes(
+        java.nio.charset.StandardCharsets.UTF_8)))
+      // hash60 halves 0 and 1 == the 15-hex-char prefixes the SQL
+      // formulation parses.
+      val h1 = Hash60.prefix60(d, 0)
+      val h2 = Hash60.prefix60(d, 8)
       var j = 0
       while (j < k) {
         val v = h1 ^ (j.toLong * h2)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Catalog, Q, Tables}
+import graft.functions.Hash60.hash60
 import graft.functions.VectorFunctions
 import graft.streaming.Replay
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -20,9 +21,11 @@ import org.apache.spark.sql.types._
   *   - the only shuffles are the final groupBy/self-join on hash keys
   *     (exact dedup groups by md5; LSH joins on (band, minhash) buckets),
   *     which is the canonical 100 TB dedup topology;
-  *   - cross-engine determinism: hashes go through md5-hex (both engines),
-  *     folds run in identical sequential order, ratios are one double
-  *     division cast to DECIMAL (see Catalog.scala rules).
+  *   - cross-engine determinism: hashes go through md5 (both engines; a
+  *     60-bit hash is Spark's native `hash60` kernel against DuckDB's
+  *     hex-prefix cast, bit-identical), folds run in identical sequential
+  *     order, ratios are one double division cast to DECIMAL (see
+  *     Catalog.scala rules).
   */
 object Pipeline {
   import Catalog.dec
@@ -350,6 +353,11 @@ object Pipeline {
       FROM cand JOIN sh sa ON sa.doc_id = id_a JOIN sh sb ON sb.doc_id = id_b
       ORDER BY id_a, id_b"""))
 
+  /** Each distinct space-split token of `text` hashed to 60 bits
+    * (`hash60`): the input of SimHash (p09, p63, p65, p77, stw_keep_best). */
+  private[graft] def tokenHashes(text: Column): Column =
+    transform(array_distinct(split(text, " ")), t => hash60(t))
+
   /** p09 — SimHash (64→60-bit) near-dup fingerprint: per-token 60-bit
     * hashes, per-bit signed vote, sign → bit. O(tokens × 60) per row, all
     * codegen'd; no shuffle at all.
@@ -358,11 +366,9 @@ object Pipeline {
     "p09_simhash",
     (s, d) => {
       import s.implicits._
-      val tokenHashes = expr(
-        """transform(array_distinct(split(text, ' ')),
-                     t -> CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT))""")
       T(s, d, "documents")
-        .select($"doc_id", VectorFunctions.simhash60(tokenHashes).as("simhash"))
+        .select($"doc_id",
+          VectorFunctions.simhash60(tokenHashes($"text")).as("simhash"))
         .orderBy($"doc_id")
     },
     Some("""
@@ -1252,9 +1258,7 @@ object Pipeline {
     "p22_stratified_sample",
     (s, d) => {
       import s.implicits._
-      def h(salt: String) =
-        conv(substring(md5(concat($"doc_id".cast(StringType), lit(salt))), 1, 15), 16, 10)
-          .cast(LongType)
+      def h(salt: String) = hash60(concat($"doc_id".cast(StringType), lit(salt)))
       val rate = when($"lang" === "en", 500).when($"lang" === "de", 250)
         .otherwise(100)
       T(s, d, "documents")
@@ -2525,13 +2529,13 @@ object Pipeline {
     * broadcast to probes, so point-lookup planning never touches data.
     */
   /** The k=2 bloom positions in [0, 240) from ONE md5 of the key (the
-    * MinHash one-md5 scheme, sigExpr above): hex chars 1–15 and 17–31
-    * are independent 60-bit halves of the digest, always positive, exact
-    * in both engines. One digest per row, not two — md5 is the dominant
-    * per-row cost of the manifest build. */
+    * MinHash one-md5 scheme, sigExpr above): `hash60` halves 0 and 1
+    * (DuckDB: hex chars 1–15 and 17–31) are independent 60-bit halves of
+    * the digest, always positive, exact in both engines. One digest per
+    * row, not two — md5 is the dominant per-row cost of the manifest
+    * build. */
   private[graft] def bloomPos(key: Column, half: Int): Column =
-    conv(substring(md5(concat(key.cast(StringType), lit("_bf"))),
-      if (half == 0) 1 else 17, 15), 16, 10).cast(LongType) % 240
+    hash60(concat(key.cast(StringType), lit("_bf")), half) % 240
   private def bloomPosSql(key: String, half: Int): String =
     s"('0x' || substr(md5(CAST($key AS VARCHAR) || '_bf'), ${if (half == 0) 1 else 17}, 15))::BIGINT % 240"
 
@@ -3471,8 +3475,7 @@ object Pipeline {
     * as 16×60-bit words — sized an order above p43's 240 so the build
     * side's growth across TESTDATA sfs stays below saturation). */
   private def rfPos(key: Column, half: Int): Column =
-    conv(substring(md5(concat(key.cast(StringType), lit("_rf"))),
-      if (half == 0) 1 else 17, 15), 16, 10).cast(LongType) % 960
+    hash60(concat(key.cast(StringType), lit("_rf")), half) % 960
   private def rfPosSql(key: String, half: Int): String =
     s"('0x' || substr(md5(CAST($key AS VARCHAR) || '_rf'), ${if (half == 0) 1 else 17}, 15))::BIGINT % 960"
 
@@ -3886,8 +3889,8 @@ object Pipeline {
 
   /** p62 — DSIR-style importance weights for data selection: hash every
     * token occurrence into 64 feature buckets (md5, the proven
-    * cross-engine 60-bit pattern), fit add-one-smoothed bucket counts on
-    * a TARGET slice (lang = 'en') vs the RAW corpus, and weight each
+    * cross-engine 60-bit pattern: `hash60`), fit add-one-smoothed bucket
+    * counts on a TARGET slice (lang = 'en') vs the RAW corpus, and weight each
     * document by its mean per-occurrence target/raw bucket ratio in
     * exact integer millionths — the hashed-n-gram importance-resampling
     * selection signal (Xie et al., "Data Selection for Language Models
@@ -3910,8 +3913,7 @@ object Pipeline {
       import s.implicits._
       val words = T(s, d, "documents")
         .select($"doc_id", $"lang", explode(split($"text", " ")).as("w"))
-        .withColumn("b",
-          expr("CAST(conv(substr(md5(w), 1, 15), 16, 10) AS BIGINT) % 64"))
+        .withColumn("b", hash60($"w") % 64)
       // Raw and target bucket counts in ONE pass over the occurrence
       // stream (conditional count), not two scans + a join: the corpus
       // is read twice total (stats, scoring), the minimum for a
@@ -3968,12 +3970,9 @@ object Pipeline {
     "p63_keep_best",
     (s, d) => {
       import s.implicits._
-      val tokenHashes = expr(
-        """transform(array_distinct(split(text, ' ')),
-                     t -> CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT))""")
       val docs = T(s, d, "documents")
       val withSim = docs.select($"doc_id", $"source", $"n_chars",
-        VectorFunctions.simhash60(tokenHashes).as("simhash"))
+        VectorFunctions.simhash60(tokenHashes($"text")).as("simhash"))
       val winners = withSim.groupBy($"simhash")
         .agg(max(struct($"n_chars", (-$"doc_id").as("nd"),
           $"source".as("src"))).as("top"))
@@ -4105,20 +4104,16 @@ object Pipeline {
     "p65_leakage_split",
     (s, d) => {
       import s.implicits._
-      val tokenHashes = expr(
-        """transform(array_distinct(split(text, ' ')),
-                     t -> CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT))""")
-      def pct(key: String) = expr(
-        s"""CAST(conv(substr(md5(CAST($key AS STRING) || '_split'), 1, 15),
-              16, 10) AS BIGINT) % 100""")
+      def pct(key: Column) =
+        hash60(concat(key.cast(StringType), lit("_split"))) % 100
       val tagged = T(s, d, "documents")
         .select($"doc_id", $"n_chars",
-          VectorFunctions.simhash60(tokenHashes).as("cluster"))
+          VectorFunctions.simhash60(tokenHashes($"text")).as("cluster"))
         .withColumn("split",
-          when(pct("cluster") < 90, "train")
-            .when(pct("cluster") < 95, "valid").otherwise("test"))
+          when(pct($"cluster") < 90, "train")
+            .when(pct($"cluster") < 95, "valid").otherwise("test"))
         .withColumn("naive_split",
-          when(pct("doc_id") < 90, "train").otherwise("eval"))
+          when(pct($"doc_id") < 90, "train").otherwise("eval"))
       val frac = tagged.groupBy($"cluster")
         .agg(countDistinct($"naive_split").as("ns"))
         .agg(count(when($"ns" > 1, 1)).as("naive_fractured"))
@@ -4887,11 +4882,8 @@ object Pipeline {
     "p77_simhash_neighbors",
     (s, d) => {
       import s.implicits._
-      val tokenHashes = expr(
-        """transform(array_distinct(split(text, ' ')),
-                     t -> CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT))""")
       val sh = T(s, d, "documents")
-        .select($"doc_id", VectorFunctions.simhash60(tokenHashes).as("sh"))
+        .select($"doc_id", VectorFunctions.simhash60(tokenHashes($"text")).as("sh"))
       val wB = Window.partitionBy($"j", $"band_val").orderBy($"doc_id")
       val bands = sh
         .select($"doc_id", $"sh", explode(sequence(lit(0), lit(3))).as("j"))
@@ -5523,10 +5515,9 @@ object Pipeline {
         .select(explode(split($"text", " ")).as("t"))
         .filter(length($"t") > 0)
         .groupBy($"t").agg(count(lit(1)).as("exact"))
-      val cells = exact.select($"t", $"exact", posexplode(expr(
-        """transform(sequence(0, 3),
-             r -> CAST(conv(substr(md5(concat(t, '_cms', CAST(r AS STRING))),
-                            1, 15), 16, 10) AS BIGINT) % 256)"""))
+      val cells = exact.select($"t", $"exact", posexplode(
+        transform(sequence(lit(0), lit(3)),
+          r => hash60(concat($"t", lit("_cms"), r.cast(StringType))) % 256))
         .as(Seq("r", "b")))
       val counters = cells.groupBy($"r", $"b").agg(sum($"exact").as("cnt"))
       cells.join(broadcast(counters), Seq("r", "b"))
@@ -5576,15 +5567,11 @@ object Pipeline {
       val ct = T(s, d, "documents")
         .select($"doc_id", $"source", split($"text", " ").as("ts"))
         .withColumn("n_tok", size($"ts"))
-        .withColumn("cuts", expr(
-          """concat(array(0),
-               CASE WHEN n_tok >= 5 THEN
-                 filter(sequence(4, n_tok - 1),
-                   i -> CAST(conv(substr(md5(array_join(
-                          slice(ts, i - 3, 4), ' ')), 1, 15), 16, 10)
-                        AS BIGINT) % 16 = 0)
-               ELSE array() END,
-               array(n_tok))"""))
+        .withColumn("cuts", concat(array(lit(0)),
+          when($"n_tok" >= 5, filter(sequence(lit(4), $"n_tok" - 1),
+              i => hash60(array_join(slice($"ts", i - 3, lit(4)), " ")) % 16 === 0))
+            .otherwise(array()),
+          array($"n_tok")))
       val cf = ct.select($"doc_id", $"source", explode(expr(
         """transform(sequence(1, size(cuts) - 1),
              k -> named_struct(
@@ -5765,9 +5752,9 @@ object Pipeline {
       val grams = base.filter($"m" >= 1)
         .select($"doc_id", $"m", $"ts",
           explode(expr("sequence(1L, m)")).as("i"))
-        .select($"doc_id", $"m", $"i", expr(
-          """CAST(conv(substr(md5(array_join(slice(ts, CAST(i AS INT), 4),
-               ' ')), 1, 15), 16, 10) AS BIGINT)""").as("h"))
+        .select($"doc_id", $"m", $"i",
+          hash60(array_join(slice($"ts", $"i".cast(IntegerType), lit(4)), " "))
+            .as("h"))
       // min over gram positions [i, i+3]; the frame clips at the doc end,
       // so for m < 4 the single kept row (i = 1) is min over ALL grams —
       // the same fallback as winnowing a doc shorter than one window.
@@ -5918,10 +5905,8 @@ object Pipeline {
       val masked = base
         .select($"doc_id", $"n_tok",
           explode(expr("sequence(1L, n_tok)")).as("p"))
-        .filter(expr(
-          """CAST(conv(substr(md5(concat(CAST(doc_id AS STRING), '_',
-               CAST(p AS STRING), '_sm')), 1, 15), 16, 10)
-             AS BIGINT) % 8 = 0"""))
+        .filter(hash60(concat($"doc_id".cast(StringType), lit("_"),
+          $"p".cast(StringType), lit("_sm"))) % 8 === 0)
         .select($"doc_id", $"n_tok",
           explode(expr("array(p, p + 1L, p + 2L)")).as("q"))
         .filter($"q" <= $"n_tok")
@@ -6166,8 +6151,7 @@ object Pipeline {
           md5(expr(
             "array_join(sort_array(array_distinct(split(text, ' '))), ' ')"))
             .as("fp"),
-          (expr("""CAST(conv(substr(md5(CAST(doc_id AS STRING) || '_ing'),
-                     1, 15), 16, 10) AS BIGINT)""") % 5 === 0)
+          (hash60(concat($"doc_id".cast(StringType), lit("_ing"))) % 5 === 0)
             .as("is_new"))
       val idx = ds.filter(!$"is_new").select($"fp").distinct()
       val batch = ds.filter($"is_new")

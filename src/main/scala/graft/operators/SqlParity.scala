@@ -115,8 +115,10 @@ object SqlParity {
   // run against the DERIVED partsupp view (Tables.partsuppSpark /
   // partsuppDuck — distinct lineitem key pairs + hash-derived attributes,
   // re-derived independently by BOTH engines so the derivation itself is
-  // oracle-checked). Their query text is shared verbatim; only the oracle
-  // gets a `WITH partsupp AS (...)` prelude since DuckDB sees raw parquet.
+  // oracle-checked; the md5→60-bit hash is the native `hash60` kernel,
+  // graft.functions.Hash60, on Spark and a hex-prefix cast on DuckDB).
+  // Their query text is shared verbatim; only the oracle gets a
+  // `WITH partsupp AS (...)` prelude since DuckDB sees raw parquet.
   // q12 and q21 need l_shipmode/l_commitdate/l_receiptdate, which TESTDATA
   // lineitem doesn't carry: they run against the EXTENDED lineitem view
   // (Tables.lineitemExtSpark / lineitemExtDuck — md5-derived shipmode and

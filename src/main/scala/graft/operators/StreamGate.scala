@@ -379,12 +379,10 @@ object StreamGate {
   private val stwKeepBest = Q(
     "stw_keep_best",
     (s, d) => {
-      val tokenHashes = expr(
-        """transform(array_distinct(split(text, ' ')),
-                     t -> CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT))""")
       val docs = graft.Tables.load(s, d, "documents")
       val withSim = docs.select(col("doc_id"), col("source"), col("n_chars"),
-        graft.functions.VectorFunctions.simhash60(tokenHashes).as("simhash"))
+        graft.functions.VectorFunctions.simhash60(
+          Pipeline.tokenHashes(col("text"))).as("simhash"))
       val winners = replay(s, "keepbest", withSim, col("doc_id") % 3, 3,
           df => StatefulProcessors.keepBest(df).toDF())
         .groupBy(col("simhash"))

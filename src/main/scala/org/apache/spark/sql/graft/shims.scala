@@ -21,6 +21,11 @@ object shims {
   def expression(c: Column): Expression =
     ColumnNodeToExpressionConverter(c.node)
 
+  /** `schema` with every field nullable, nested ones too — what a file
+    * source reports for data it reads (private[spark] surface). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** Analyzed logical plan of a DataFrame (private[sql] surface). */
   def logicalPlan(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

@@ -1,6 +1,7 @@
 package graft
 
-import graft.functions.{GraftExtensions, MinHashShingleSig, VectorFunctions}
+import graft.functions.{GraftExtensions, Hash60, MinHashShingleSig, VectorFunctions}
+import graft.streaming.ReplayConfs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -48,6 +49,49 @@ class FunctionsSpec extends AnyFunSuite {
         .count()
     }
     assert(bad.forall(_ == 0), s"minhash mismatch counts: $bad")
+  }
+
+  // Empty, ASCII, multi-byte UTF-8 (2-, 3- and 4-byte sequences), a 10 KB
+  // string and a null. Repartitioned so the projection runs in a plan, not
+  // folded into the local relation by the optimizer.
+  private def hash60Inputs = {
+    val big = "ab\u00e9\u65e5 " * 1280 // 8 UTF-8 bytes per repeat
+    Seq(Some(""), Some("plain ascii"), Some("caf\u00e9 \u65e5\u672c \ud83d\ude00"),
+      Some(big), None).toDF("s").repartition(2)
+  }
+
+  for ((mode, wholeStage) <- Seq("NO_CODEGEN" -> "false", "CODEGEN_ONLY" -> "true")) {
+    test(s"hash60 equals the conv(substr(md5)) chain, both halves ($mode)") {
+      // AQE off so the executed plan shows its codegen stages up front.
+      ReplayConfs.withConfs(spark, "spark.sql.codegen.factoryMode" -> mode,
+          "spark.sql.codegen.wholeStage" -> wholeStage,
+          "spark.sql.adaptive.enabled" -> "false") {
+        val df = hash60Inputs.select($"s",
+          Hash60.hash60($"s").as("h0"), Hash60.hash60($"s", 1).as("h1"),
+          expr("CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)").as("c0"),
+          expr("CAST(conv(substr(md5(s), 17, 15), 16, 10) AS BIGINT)").as("c1"))
+        val inCodegen = df.queryExecution.executedPlan.collect {
+          case w: org.apache.spark.sql.execution.WholeStageCodegenExec
+              if w.child.expressions.exists(_.exists(_.isInstanceOf[Hash60])) => w
+        }
+        assert(inCodegen.nonEmpty == (wholeStage == "true"),
+          s"hash60 codegen placement:\n${df.queryExecution.executedPlan}")
+        val rows = df.collect()
+        assert(rows.length == 5)
+        for (r <- rows) {
+          val s = Option(r.getString(0))
+          def opt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+          assert(opt(1) == opt(3) && opt(2) == opt(4),
+            s"hash60 ${(opt(1), opt(2))} != conv chain ${(opt(3), opt(4))} " +
+              s"for ${s.map(_.take(20))}")
+          assert(opt(1).isDefined == s.isDefined && opt(2).isDefined == s.isDefined)
+          assert((opt(1).toSeq ++ opt(2)).forall(h => h >= 0 && h < (1L << 60)))
+        }
+        assert(rows.exists(_.getString(0) == null))
+        assert(rows.exists(r => r.getString(0) != null &&
+          r.getString(0).getBytes("UTF-8").length >= 10240))
+      }
+    }
   }
 
   test("minhash LSH banding is parameterizable; multi-row bands are stricter") {
@@ -118,6 +162,13 @@ class FunctionsSpec extends AnyFunSuite {
     assert(r6.forall { case (b4, b8) =>
       b4 >= 0 && b4 < 16 && b8 >= 0 && b8 < 256
     })
+    // hash60: the default half is 0; half 1 reads digest bytes 8-15.
+    val r7 = spark.sql(
+      """SELECT hash60(text) = CAST(conv(substr(md5(text), 1, 15), 16, 10) AS BIGINT),
+           hash60(text, 0) = hash60(text),
+           hash60(text, 1) = CAST(conv(substr(md5(text), 17, 15), 16, 10) AS BIGINT)
+         FROM documents LIMIT 10""").collect()
+    assert(r7.length == 10 && r7.forall(row => (0 until 3).forall(row.getBoolean)))
   }
 
   test("extensions class applies cleanly to a SparkSessionExtensions") {

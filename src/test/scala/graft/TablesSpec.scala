@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** `Tables` infers each parquet input's schema once per process: a repeat
   * read of unchanged files submits no Spark job, and a rewrite at the same
-  * path is inferred again.
+  * path is inferred again. The derived views are read back with the schema
+  * their write produced, and derived again when lineitem is rewritten.
   */
 class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val tmpDirs = scala.collection.mutable.ArrayBuffer.empty[File]
@@ -25,26 +26,30 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.001"
   private lazy val spark = SparkTestSession.spark
 
-  /** Spark jobs started while `body` runs. Listener events are delivered
-    * asynchronously but in order, so `body` is bracketed by two marker jobs
-    * and only the jobs seen between the markers are counted.
+  /** Spark jobs started while `body` runs, as the SQL execution id each
+    * ran under (None for a job outside any SQL execution, such as parquet
+    * schema inference). Listener events are delivered asynchronously but
+    * in order, so `body` is bracketed by two marker jobs and only the jobs
+    * seen between the markers are kept.
     */
-  private def jobsDuring(body: => Unit): Int = {
+  private def jobExecutionsDuring(body: => Unit): Seq[Option[String]] = {
     val sc = spark.sparkContext
-    val seen = new LinkedBlockingQueue[String]()
+    val seen = new LinkedBlockingQueue[(String, Option[String])]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        seen.put((prop("spark.job.description").getOrElse(""),
+          prop("spark.sql.execution.id")))
+      }
     }
     def marker(tag: String): Unit = {
       sc.setJobDescription(tag)
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
     }
-    def drainTo(tag: String): Int =
+    def drainTo(tag: String): Seq[Option[String]] =
       Iterator.continually(seen.poll(60, TimeUnit.SECONDS))
-        .map { d => assert(d != null, s"marker job '$tag' never reached the listener"); d }
-        .takeWhile(_ != tag).size
+        .map { j => assert(j != null, s"marker job '$tag' never reached the listener"); j }
+        .takeWhile(_._1 != tag).map(_._2).toSeq
     sc.addSparkListener(listener)
     try {
       marker("tables-spec-start")
@@ -53,6 +58,16 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
       drainTo("tables-spec-start")
       drainTo("tables-spec-end")
     } finally sc.removeSparkListener(listener)
+  }
+
+  private def jobsDuring(body: => Unit): Int = jobExecutionsDuring(body).size
+
+  /** A fresh dir holding a copy of the sf0.001 tables. */
+  private def copyOfSf(): String = {
+    val dir = tmp("graft_tables_sf")
+    FileUtils.copyDirectory(new File(sf), new File(dir))
+    new File(dir).listFiles().foreach(_.setWritable(true))
+    dir
   }
 
   test("a second load of unchanged files submits no Spark job") {
@@ -70,6 +85,37 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     Tables.registerAll(spark, sf)
     assert(jobsDuring(Tables.registerAll(spark, sf)) == 0)
     assert(spark.table("partsupp").count() > 0)
+  }
+
+  test("registerAll reads the derived views with their write schema: no inference job") {
+    val dir = copyOfSf()
+    Tables.all.foreach(Tables.load(spark, dir, _)) // infer the raw tables first
+    val jobs = jobExecutionsDuring(Tables.registerAll(spark, dir))
+    // The two view writes run as SQL executions; an inference job runs
+    // outside any.
+    assert(jobs.nonEmpty, "registerAll on a fresh dir wrote no derived view")
+    assert(jobs.forall(_.isDefined),
+      s"${jobs.count(_.isEmpty)} job(s) outside a SQL execution: schema inference")
+    val views = Tables.materialized(spark, dir)
+    assert(views.map(_.view).sorted == Seq("lineitem", "partsupp"))
+    for (m <- views)
+      assert(spark.table(m.view).schema == spark.read.parquet(m.path).schema,
+        s"${m.view}: registered schema differs from what parquet inference reads")
+  }
+
+  test("a lineitem rewritten at the same path is derived again") {
+    val dir = copyOfSf()
+    Tables.registerAll(spark, dir)
+    val before = spark.table("partsupp").count()
+    val even = spark.read.parquet(s"$sf/lineitem.parquet").filter("l_orderkey % 2 = 0")
+    even.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    Tables.registerAll(spark, dir)
+    val pairs = even.select("l_partkey", "l_suppkey").distinct().count()
+    assert(pairs < before, "the rewrite must change the derived partsupp")
+    assert(spark.table("partsupp").count() == pairs)
+    assert(spark.table("lineitem").count() == even.count())
+    assert(spark.table("lineitem").filter("l_orderkey % 2 = 1").isEmpty)
+    assert(spark.table("lineitem").filter("l_shipmode IS NULL").isEmpty)
   }
 
   test("a file rewritten at the same path is inferred again") {
